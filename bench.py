@@ -102,8 +102,8 @@ def _knn_gemm_join(spark, sf_dir):
 
 
 def _pq_rerank_cogroup(spark, sf_dir):
-    """The collect-free PQ cascade (pq_topk_cogroup + AQE-planned
-    rerank joins)."""
+    """The collect-free PQ cascade (the block top-k kernel's cogroup
+    strategy with the ADC scorer + AQE-planned rerank joins)."""
     from rag_vertex_ai_vector_search_spark.operators.pq import (
         encode_pq,
         pq_search_rerank,

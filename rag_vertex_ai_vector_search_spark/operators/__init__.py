@@ -1,12 +1,10 @@
 from .knn import (
     brute_force_topk,
-    gemm_topk_cogroup,
     knn_search,
-    knn_search_blocked,
     knn_search_cosine,
     knn_search_l2,
 )
-from .ivf import IVFIndex, build_ivf_index, ivf_search, ivf_search_blocked
+from .ivf import IVFIndex, build_ivf_index, ivf_search
 from .upsert import merge_by_key, point_lookup, point_update
 from .dedup import (
     dedup_boilerplate_lines,
@@ -65,7 +63,6 @@ from .pq import (
     ivf_pq_search,
     pq_search_rerank,
     pq_topk,
-    pq_topk_cogroup,
     train_pq,
 )
 from .ivf2 import IVF2Index, build_ivf2_index, ivf2_search
@@ -102,7 +99,6 @@ __all__ = [
     "ivf_pq_search",
     "pq_search_rerank",
     "pq_topk",
-    "pq_topk_cogroup",
     "train_pq",
     "IVF2Index",
     "build_ivf2_index",
@@ -123,15 +119,12 @@ __all__ = [
     "unigram_surprisal",
     "vocab_coverage_report",
     "knn_search",
-    "knn_search_blocked",
     "knn_search_cosine",
     "knn_search_l2",
-    "gemm_topk_cogroup",
     "brute_force_topk",
     "IVFIndex",
     "build_ivf_index",
     "ivf_search",
-    "ivf_search_blocked",
     "merge_by_key",
     "point_lookup",
     "point_update",

@@ -124,9 +124,7 @@ def lsh_topk(
         dot_product("_q", "_v").alias("score"),
         *extra_cols,
     )
-    return _ranked(scored, k, per_crowding_k, crowding_col).select(
-        "query_id", "rank", "neighbor_id", "score", *extra_cols,
-    )
+    return _ranked(scored, k, per_crowding_k, crowding_col)
 
 
 def knn_empty(index_df, queries_df, query_id_col, id_col):

@@ -28,7 +28,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .knn import knn_search
+from ..functions.vector import dot_product
+from .knn import (
+    _collect_queries,
+    _ranked,
+    _resolve_query_method,
+    block_topk_broadcast,
+    block_topk_cogroup,
+    dot_scorer,
+)
 
 
 @dataclass
@@ -262,7 +270,7 @@ def _probe_assign_udf(centroids: np.ndarray, nprobe: int):
     dot-product ranking matches). The centroid matrix is tiny
     (n_clusters x dim doubles) and ships in the UDF closure, so probe
     assignment runs ON EXECUTORS -- the query set never touches the
-    driver for the fold / gemm_join paths."""
+    driver for the fold / gemm_join paths (``_probe_on_executors``)."""
     from pyspark.sql import types as T
 
     def _assign(vecs: pd.Series) -> pd.Series:
@@ -271,6 +279,74 @@ def _probe_assign_udf(centroids: np.ndarray, nprobe: int):
         return pd.Series([row.astype("int32").tolist() for row in probes])
 
     return F.pandas_udf(_assign, T.ArrayType(T.IntegerType()))
+
+
+def _probe_on_driver(
+    queries_df: DataFrame,
+    query_id_col: str,
+    query_vec_col: str,
+    centroids: np.ndarray,
+    nprobe: int,
+):
+    """Driver-side probe preparation, for the broadcast strategy: one
+    collect of the query set, numpy probe ranking against the
+    driver-held centroids, the per-query probe mask, and the union of
+    probed clusters for the static ``isin`` prune. Returns (qids,
+    qmat, probe_mask, all_probed)."""
+    qids, qmat = _collect_queries(queries_df, query_id_col, query_vec_col)
+    probe_mask = np.zeros((len(qids), centroids.shape[0]), dtype=bool)
+    if not qids:
+        return qids, qmat, probe_mask, []
+    probes = _probe_assign_np(qmat, centroids, nprobe)
+    probe_mask[np.arange(len(qids))[:, None], probes] = True
+    return qids, qmat, probe_mask, sorted(int(c) for c in np.unique(probes))
+
+
+def _probe_on_executors(
+    queries_df: DataFrame, query_id_col: str, query_vec_col: str, probe_udf
+):
+    """Executor-side probe preparation, for the cogroup and fold
+    strategies: ``probe_udf`` (query vector -> array<int> probed
+    clusters) runs on executors, so the query set never touches the
+    driver. The one collect is of DISTINCT PROBED CLUSTER IDS --
+    bounded by the number of clusters, never by query count or data
+    size. Returns (pruned_q with query_id, _qvec, _probe; all_probed)."""
+    pruned_q = queries_df.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(query_vec_col).alias("_qvec"),
+    ).withColumn("_probe", probe_udf(F.col("_qvec")))
+    all_probed = sorted(
+        r[0] for r in
+        pruned_q.select(F.explode("_probe").alias("c")).distinct().collect()
+    )
+    return pruned_q, all_probed
+
+
+def _probed_fold(
+    candidates: DataFrame,
+    pruned_q: DataFrame,
+    k: int,
+    *,
+    id_col: str,
+    vec_col: str,
+    per_crowding_k: int | None,
+    crowding_col: str | None,
+) -> DataFrame:
+    """Declarative scoring of probed candidates (flat and two-level
+    IVF): broadcast cross join with ``_probe_on_executors``' queries,
+    per-pair probe filter, fold dot product (bit-exact vs DuckDB),
+    two-window ``_ranked``."""
+    scored = (
+        candidates.crossJoin(F.broadcast(pruned_q))
+        .filter(F.array_contains(F.col("_probe"), F.col("cluster_id")))
+        .select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            dot_product(F.col("_qvec"), F.col(vec_col)).alias("score"),
+            *([crowding_col] if crowding_col else []),
+        )
+    )
+    return _ranked(scored, k, per_crowding_k, crowding_col)
 
 
 def ivf_search(
@@ -287,7 +363,6 @@ def ivf_search(
     per_crowding_k: int | None = None,
     crowding_col: str | None = None,
     auto_threshold: int | None = None,
-    **knn_kwargs,
 ) -> DataFrame:
     """Pruned top-k: probe the best ``nprobe`` clusters per query.
 
@@ -299,29 +374,25 @@ def ivf_search(
 
     ``per_crowding_k`` / ``crowding_col`` compose the reference's
     crowding tag (Q5, setup_vector_search.py:65-67) over the pruned
-    path: the gemm strategies run the exact crowd-capped local prune
-    inside ``_score_block`` (locally exact, same argument as
-    knn_search's gemm path) and every strategy finishes with the same
-    two-window ``_ranked`` the exact path uses.
+    path: the gemm strategies run the block top-k kernel's exact
+    crowd-capped local prune (knn.py) and every strategy finishes with
+    the same two-window ``_ranked`` the exact path uses.
 
     ``probe_percent`` defaults to the reference's
     leaf_nodes_to_search_percent=10 (common/config.py:38).
 
-    Probe assignment is a pandas UDF over the query DataFrame (the
-    centroid matrix is the only driver-side state). The one collect is
-    of DISTINCT PROBED CLUSTER IDS -- bounded by n_clusters ints, never
-    by query count or data size -- which feeds a static ``isin`` filter
-    so pruning on a saved ``partitionBy("cluster_id")`` layout is
-    partition pruning of BYTES. Methods: "gemm" (mapInPandas, query
-    matrix via SparkContext.broadcast), "gemm_join" (cogroup block
-    GEMM, no driver materialization of queries at all), "fold"
-    (declarative broadcast join + fold scoring, bit-exact vs DuckDB),
-    "auto" (default: "gemm" at or under ``auto_threshold`` query rows,
-    "gemm_join" above -- the scale-safe strategy without the caller
-    having to know their scale).
+    The union of probed clusters feeds a static ``isin`` filter, so
+    pruning on a saved ``partitionBy("cluster_id")`` layout is
+    partition pruning of BYTES; each query is also masked to its own
+    probed clusters. Methods: "gemm" (the kernel's broadcast strategy
+    with the dot scorer; probes rank driver-side on the query matrix
+    the strategy collects anyway), "gemm_join" (the cogroup strategy;
+    probes run in a pandas UDF, no driver materialization of queries
+    at all), "fold" (declarative broadcast join + fold scoring,
+    bit-exact vs DuckDB), "auto" (default: "gemm" at or under
+    ``auto_threshold`` query rows, "gemm_join" above -- the scale-safe
+    strategy without the caller having to know their scale).
     """
-    from .knn import _ranked, _resolve_query_method, gemm_topk_cogroup
-
     method = _resolve_query_method(
         queries_df, method, small="gemm", large="gemm_join",
         threshold=auto_threshold,
@@ -332,197 +403,37 @@ def ivf_search(
         nprobe = max(1, int(round(n_clusters * probe_percent / 100.0)))
 
     if method == "gemm":
-        # The gemm strategy materializes the query matrix on the driver
-        # anyway (SparkContext.broadcast) -- so probe assignment runs
-        # driver-side in numpy against the already-driver-held centroid
-        # matrix. That folds what was three Spark jobs (probe-UDF pass,
-        # distinct+collect of probed leaves, scoring scan) into ONE
-        # scoring scan; at request scale the saved job-launch overhead
-        # dominates the whole query (r2 bench regression), and at data
-        # scale query sets this path is wrong anyway -- use gemm_join.
-        rows = queries_df.select(query_id_col, query_vec_col).collect()
-        if not rows:
-            return knn_search(
-                index.assigned.limit(0), queries_df, k,
-                id_col=index.id_col, vec_col=index.vec_col,
-                query_id_col=query_id_col, query_vec_col=query_vec_col,
-                method="fold", **knn_kwargs,
-            )
-        qids = [r[0] for r in rows]
-        qmat = np.asarray([r[1] for r in rows], dtype=np.float64)
-        probes = _probe_assign_np(qmat, index.centroids, nprobe)
-        probe_mask = np.zeros((len(qids), n_clusters), dtype=bool)
-        probe_mask[np.arange(len(qids))[:, None], probes] = True
-        all_probed = sorted(int(c) for c in np.unique(probes))
-        candidates = index.assigned.filter(
-            F.col("cluster_id").isin(all_probed)
+        # Driver-side probes fold what would be three Spark jobs
+        # (probe-UDF pass, distinct+collect of probed leaves, scoring
+        # scan) into ONE scoring scan; at request scale the saved
+        # job-launch overhead dominates the whole query.
+        qids, qmat, probe_mask, all_probed = _probe_on_driver(
+            queries_df, query_id_col, query_vec_col, index.centroids, nprobe
         )
-        if restrict is not None:
-            candidates = candidates.filter(restrict)
-        return _gemm_masked_topk_collected(
-            candidates, qids, qmat, probe_mask, k,
-            id_col=index.id_col, vec_col=index.vec_col,
-            query_id_type=queries_df.schema[query_id_col].dataType,
-            per_crowding_k=per_crowding_k, crowding_col=crowding_col,
-        )
-
-    pruned_q = queries_df.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("_qvec"),
-    ).withColumn(
-        "_probe", _probe_assign_udf(index.centroids, nprobe)(F.col("_qvec"))
-    )
-
-    # Union of probed clusters: <= n_clusters ints regardless of scale.
-    all_probed = sorted(
-        r[0] for r in
-        pruned_q.select(F.explode("_probe").alias("c")).distinct().collect()
-    )
-    if not all_probed:
-        return knn_search(
-            index.assigned.limit(0), queries_df, k,
-            id_col=index.id_col, vec_col=index.vec_col,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-            method="fold", **knn_kwargs,
+    else:
+        pruned_q, all_probed = _probe_on_executors(
+            queries_df, query_id_col, query_vec_col,
+            _probe_assign_udf(index.centroids, nprobe),
         )
     candidates = index.assigned.filter(F.col("cluster_id").isin(all_probed))
     if restrict is not None:
         candidates = candidates.filter(restrict)
 
-    extra_cols = [crowding_col] if crowding_col else []
+    crowding = dict(per_crowding_k=per_crowding_k, crowding_col=crowding_col)
+    if method == "gemm":
+        return block_topk_broadcast(
+            candidates, qids, qmat, k, dot_scorer(index.vec_col),
+            id_col=index.id_col,
+            query_id_type=queries_df.schema[query_id_col].dataType,
+            probe_mask=probe_mask, **crowding,
+        )
     if method == "gemm_join":
-        scored = gemm_topk_cogroup(
-            candidates, pruned_q, k,
-            id_col=index.id_col, vec_col=index.vec_col,
-            query_id_col="query_id", query_vec_col="_qvec",
-            probe_col="_probe", cluster_col="cluster_id",
-            n_clusters=n_clusters,
-            per_crowding_k=per_crowding_k, crowding_col=crowding_col,
+        return block_topk_cogroup(
+            candidates, pruned_q, k, dot_scorer(index.vec_col),
+            id_col=index.id_col, query_vec_col="_qvec",
+            probe_col="_probe", n_clusters=n_clusters, **crowding,
         )
-        return _ranked(scored, k, per_crowding_k, crowding_col).select(
-            "query_id", "rank", "neighbor_id", "score", *extra_cols
-        )
-
-    # Declarative fallback: per-pair probe filter + fold scoring.
-    from ..functions.vector import dot_product
-
-    scored = (
-        candidates.crossJoin(F.broadcast(pruned_q))
-        .filter(F.array_contains(F.col("_probe"), F.col("cluster_id")))
-        .select(
-            "query_id",
-            F.col(index.id_col).alias("neighbor_id"),
-            dot_product(F.col("_qvec"), F.col(index.vec_col)).alias("score"),
-            *extra_cols,
-        )
-    )
-    return _ranked(scored, k, per_crowding_k, crowding_col).select(
-        "query_id", "rank", "neighbor_id", "score", *extra_cols
-    )
-
-
-def ivf_search_blocked(
-    index: IVFIndex,
-    queries_df: DataFrame,
-    k: int,
-    *,
-    query_id_col: str = "query_id",
-    max_queries_per_block: int = 4096,
-    **kwargs,
-) -> DataFrame:
-    """IVF search for query sets too large for one broadcast matrix.
-
-    Mirrors knn_search_blocked: hash queries into blocks of
-    ``max_queries_per_block``, run ivf_search per block, union the
-    plans -- peak per-task memory is bounded by one block's query
-    matrix. (For query sets that should never touch the driver at all,
-    call ivf_search(method="gemm_join") instead.)
-    """
-    import math
-
-    n_rows = queries_df.count()
-    n_blocks = max(1, math.ceil(n_rows / max_queries_per_block))
-    if n_blocks == 1:
-        return ivf_search(
-            index, queries_df, k, query_id_col=query_id_col, **kwargs
-        )
-    blocked = queries_df.withColumn(
-        "_qblock", F.pmod(F.hash(F.col(query_id_col)), F.lit(n_blocks))
-    )
-    parts = [
-        ivf_search(
-            index,
-            blocked.filter(F.col("_qblock") == b).drop("_qblock"),
-            k,
-            query_id_col=query_id_col,
-            **kwargs,
-        )
-        for b in range(n_blocks)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _gemm_masked_topk_collected(
-    candidates: DataFrame,
-    qids,
-    qmat: np.ndarray,
-    probe_mask: np.ndarray,
-    k: int,
-    *,
-    id_col: str,
-    vec_col: str,
-    query_id_type,
-    per_crowding_k: int | None = None,
-    crowding_col: str | None = None,
-) -> DataFrame:
-    """One BLAS GEMM per Arrow batch + per-query probe MASK, then exact
-    local top-k; global window finishes. Each query only keeps scores
-    from ITS probed clusters, so multi-query batches share the GEMM
-    without over-scanning. Query matrix + mask ship via
-    SparkContext.broadcast (one fetch per executor, not per task).
-    Crowding runs the exact crowd-capped local prune in _score_block
-    (same exactness argument as knn_search's gemm path)."""
-    from pyspark.sql import types as T
-
-    from .knn import _ranked, _score_block
-
-    out_schema = T.StructType([
-        T.StructField("query_id", query_id_type),
-        T.StructField("neighbor_id", candidates.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-    if crowding_col:
-        out_schema.add(crowding_col, candidates.schema[crowding_col].dataType)
-    extra_cols = [crowding_col] if crowding_col else []
-
-    bc = candidates.sparkSession.sparkContext.broadcast(
-        (qids, qmat, probe_mask)
-    )
-
-    def score(batches):
-        b_qids, b_qmat, b_mask = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            frames = _score_block(
-                b_qids, b_qmat,
-                pdf[id_col].to_numpy(),
-                np.asarray(list(pdf[vec_col]), dtype=np.float64),
-                k,
-                crowd=pdf[crowding_col].to_numpy() if crowding_col else None,
-                per_crowding_k=per_crowding_k, crowding_col=crowding_col,
-                probe_mask=b_mask,
-                clusters=pdf["cluster_id"].to_numpy(),
-            )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = candidates.select(
-        id_col, vec_col, "cluster_id", *extra_cols
-    ).mapInPandas(score, out_schema)
-    return _ranked(scored, k, per_crowding_k, crowding_col).select(
-        "query_id", "rank", "neighbor_id", "score", *extra_cols
+    return _probed_fold(
+        candidates, pruned_q, k,
+        id_col=index.id_col, vec_col=index.vec_col, **crowding,
     )

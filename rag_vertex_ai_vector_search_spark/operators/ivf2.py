@@ -18,8 +18,9 @@ coarse-over-fine hierarchy -- the standard IMI/two-level inverted file
   partition pruning of bytes).
 - **search**: rank coarse centroids, keep top ``Pc``; rank only THEIR
   fine centroids, keep top ``Pf`` per probed coarse. The candidate
-  leaf set is per-query; scoring reuses the declarative fold (exact,
-  oracle-compatible scores) over ``array_contains``-masked candidates.
+  leaf set is per-query; scoring is flat IVF's declarative fold
+  (``ivf._probed_fold``: exact, oracle-compatible scores over
+  ``array_contains``-masked candidates).
 
 Full probe at both levels provably degenerates to exact kNN
 (tests/test_ivf2.py), the same gate trick as flat IVF / PQ.
@@ -35,8 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.vector import dot_product
-from .knn import _ranked
+from .ivf import _probe_on_executors, _probed_fold
 from .pq import _kmeans_1sub
 
 
@@ -174,31 +174,14 @@ def ivf2_search(
             out.append(sorted(leaves))
         return pd.Series(out)
 
-    pruned_q = queries_df.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("_qvec"),
-    ).withColumn("_probe", _probe(F.col("_qvec")))
-
-    # Static partition-pruning filter: union of probed leaves, bounded
-    # by C*F ints regardless of query count or data size.
-    all_probed = sorted(
-        r[0] for r in
-        pruned_q.select(F.explode("_probe").alias("c")).distinct().collect()
+    pruned_q, all_probed = _probe_on_executors(
+        queries_df, query_id_col, query_vec_col, _probe
     )
     candidates = index.assigned.filter(F.col("cluster_id").isin(all_probed))
     if restrict is not None:
         candidates = candidates.filter(restrict)
-    extra_cols = [crowding_col] if crowding_col else []
-    scored = (
-        candidates.crossJoin(F.broadcast(pruned_q))
-        .filter(F.array_contains(F.col("_probe"), F.col("cluster_id")))
-        .select(
-            "query_id",
-            F.col(index.id_col).alias("neighbor_id"),
-            dot_product(F.col("_qvec"), F.col(index.vec_col)).alias("score"),
-            *extra_cols,
-        )
-    )
-    return _ranked(scored, k, per_crowding_k, crowding_col).select(
-        "query_id", "rank", "neighbor_id", "score", *extra_cols
+    return _probed_fold(
+        candidates, pruned_q, k,
+        id_col=index.id_col, vec_col=index.vec_col,
+        per_crowding_k=per_crowding_k, crowding_col=crowding_col,
     )

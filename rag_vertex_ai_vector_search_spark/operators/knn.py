@@ -7,54 +7,61 @@ dot-product scoring (Q2, common/config.py:33) -> per-attribute crowding
 approximate_neighbors_count, common/config.py:32) -> metadata hydration
 join (Q7, firestore_ops.py:90-107).
 
-Two physical strategies, same results:
+Every search is a top-k scan followed by a key join. Exact (this
+module), IVF (ivf.py) and PQ (pq.py) search share ONE block top-k
+kernel for the scan: each family only generates its candidates and
+picks a scorer and a strategy.
 
-- ``method="fold"``: broadcast cross join + a sequential-fold dot
-  product Column. Fully declarative; Catalyst pushes the restrict
-  filters below the join, and the final limit becomes
-  TakeOrderedAndProject. Scores are bit-identical to DuckDB's
-  DOUBLE[] list_dot_product, which is what the oracle gate hashes.
+- **One local top-k** (``_local_topk``): per query, keep every block
+  row at or above the k-th best score, then order by (score desc, id
+  asc) -- the global window's tie-break, so boundary ties are never
+  dropped at random. Optionally capped per crowd group first, and
+  optionally masked to each query's probed clusters (IVF).
+- **Two scorers** (``Scorer``): ``prepare`` turns the (nq, dim) query
+  matrix into per-query state, ``score`` turns that state and one
+  block of candidates into an (nq, n) score matrix. ``dot_scorer`` is
+  identity + one float64 GEMM; ``pq.adc_scorer`` is the (nq, m, ksub)
+  lookup table + an m-way gather over uint8 codes.
+- **Two strategies.** ``block_topk_broadcast``: the query set is
+  already on the driver; ``prepare`` runs once there and its output
+  ships via ``SparkContext.broadcast`` (driver materialization +
+  torrent broadcast, one fetch per executor -- the mechanism of Spark's
+  own BroadcastExchange), then ONE ``mapInPandas`` pass scans the
+  candidates in place with no shuffle before the window.
+  ``block_topk_cogroup``: NO driver collect anywhere; the candidates
+  hash into ``n_index_blocks``, queries replicate across the blocks
+  (``n_query_blocks > 1`` also splits queries, replicating candidates,
+  to bound per-task memory) and each ``cogroup().applyInPandas`` group
+  prepares and scans. It costs one shuffle of the candidates; use it
+  when the query set is too big to hold on the driver.
 
-- ``method="gemm"``: ``mapInPandas`` over index partitions with the
-  (small) query matrix broadcast to every task; one BLAS GEMM per
-  Arrow batch, then a *local* top-k per query (and per crowd group
-  when crowding is on) before the global window. This is the
-  100 TB path: the shuffle after local pruning carries at most
-  ``n_queries * k`` rows per partition instead of the full cross
-  product, so per-query skew in the window stage is bounded. The
-  query matrix ships via ``SparkContext.broadcast`` (driver
-  materialization + torrent broadcast -- the exact mechanism of
-  Spark's own BroadcastExchange), NOT via task closure, so executors
-  fetch it once instead of once per task and the task-serialization
-  ceiling disappears.
+Both strategies finish with the global two-window ``_ranked``. The
+shuffle after local pruning carries at most ``n_queries * k`` rows per
+block, so per-query skew in the window stage is bounded. The local
+crowding prune is exact for the two-window crowding semantics: any row
+in the global capped top-k is within the top ``per_crowding_k`` of its
+(query, crowd) group in its own block, and below-local-top-k rows can
+never be promoted globally (each of the k locally-better capped rows
+is either selected globally or evicted by a strictly better same-group
+row, so >= k better capped rows always exist globally).
 
-- ``method="gemm_join"``: two-sided block-partitioned GEMM via
-  ``cogroup().applyInPandas`` -- NO driver collect anywhere. The
-  index hashes into ``n_index_blocks``, queries replicate across the
-  blocks (and optionally split into query blocks, replicating the
-  index instead), each cogroup runs one GEMM + exact local top-k.
-  Costs one shuffle of the index; use it when the query set is too
-  big to materialize on the driver at all, i.e. when BOTH sides are
-  data-scale. For request-scale query sets prefer "gemm", which
-  streams the index in place with no shuffle.
-
-Local crowding prune is exact for the two-window crowding semantics:
-any row in the global capped top-k is within the top
-``per_crowding_k`` of its (query, crowd) group in its own partition,
-and below-local-top-k rows can never be promoted globally (each of the
-k locally-better capped rows is either selected globally or evicted by
-a strictly better same-group row, so >= k better capped rows always
-exist globally).
+``knn_search`` methods: ``"gemm"`` = broadcast strategy + dot scorer,
+``"gemm_join"`` = cogroup strategy + dot scorer, ``"fold"`` = broadcast
+cross join + a sequential-fold dot product Column, fully declarative
+(Catalyst pushes the restrict filters below the join) and bit-identical
+to DuckDB's DOUBLE[] list_dot_product, which is what the oracle gate
+hashes.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Any, Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vector import dot_product
 
@@ -90,29 +97,58 @@ def _resolve_query_method(
     return small if queries_df.count() <= t else large
 
 
-def _score_block(
+class Scorer(NamedTuple):
+    """How one block of candidate rows scores against the query set.
+
+    ``col`` is the candidate column read. ``prepare(qmat)`` maps the
+    (nq, dim) float64 query matrix to per-query state;
+    ``score(state, block)`` maps that state and one block of ``col``
+    to an (nq, n) float64 score matrix. The broadcast strategy ships
+    ``score`` without ``prepare``, so ``score`` must need nothing but
+    its arguments.
+    """
+
+    col: str
+    prepare: Callable[[np.ndarray], Any]
+    score: Callable[[Any, pd.Series], np.ndarray]
+
+
+def _identity(qmat: np.ndarray) -> np.ndarray:
+    return qmat
+
+
+def _gemm(qmat: np.ndarray, vecs: pd.Series) -> np.ndarray:
+    return qmat @ np.asarray(list(vecs), dtype=np.float64).T
+
+
+def dot_scorer(vec_col: str) -> Scorer:
+    """Exact dot product: one float64 GEMM per block."""
+    return Scorer(vec_col, _identity, _gemm)
+
+
+def _local_topk(
     qids,
-    qmat: np.ndarray,
-    ids,
-    vmat: np.ndarray,
+    scores: np.ndarray,
+    block: pd.DataFrame,
     k: int,
     *,
-    crowd=None,
+    id_col: str,
+    probe_mask: np.ndarray | None = None,
     per_crowding_k: int | None = None,
     crowding_col: str | None = None,
-    probe_mask: np.ndarray | None = None,
-    clusters=None,
-) -> list[pd.DataFrame]:
-    """One float64 GEMM over (query set x vector block); emit only local
-    winners per query. Shared by every gemm strategy (mapInPandas,
-    cogroup, IVF-masked) so their scores are computed identically.
+) -> pd.DataFrame | None:
+    """The one local top-k: an (nq, n) score matrix over ``block`` ->
+    each query's local winners as (query_id, neighbor_id, score[,
+    crowding_col]) rows, or None when no query has any.
 
-    ``probe_mask`` (nq x n_clusters bool) + ``clusters`` (per-vector
-    cluster id) restrict each query to its probed clusters (IVF).
+    ``probe_mask`` (nq x n_clusters bool) + the block's ``cluster_id``
+    restrict each query to its probed clusters, so a query's candidate
+    set does not depend on which other queries share the block.
     """
-    scores = qmat @ vmat.T  # (nq, nv)
+    ids = block[id_col].to_numpy()
+    crowd = block[crowding_col].to_numpy() if crowding_col else None
     if probe_mask is not None:
-        allowed = probe_mask[:, clusters]  # (nq, nv)
+        allowed = probe_mask[:, block["cluster_id"].to_numpy()]  # (nq, nv)
         scores = np.where(allowed, scores, -np.inf)
     nv = scores.shape[1]
     has_crowd = per_crowding_k is not None and crowding_col is not None
@@ -165,12 +201,14 @@ def _score_block(
             if crowding_col:
                 out[crowding_col] = crowd[idx]
             frames.append(out)
-    return frames
+    return pd.concat(frames, ignore_index=True) if frames else None
 
 
 def _ranked(scored: DataFrame, k: int, per_crowding_k: int | None,
             crowding_col: str | None) -> DataFrame:
-    """Apply (optional) crowding cap then top-k; deterministic tie-break."""
+    """Apply (optional) crowding cap then top-k; deterministic
+    tie-break. Returns (query_id, rank, neighbor_id, score[,
+    crowding_col])."""
     order = [F.col("score").desc(), F.col("neighbor_id").asc()]
     if per_crowding_k is not None and crowding_col is not None:
         crowd_w = Window.partitionBy("query_id", crowding_col).orderBy(*order)
@@ -183,7 +221,192 @@ def _ranked(scored: DataFrame, k: int, per_crowding_k: int | None,
     return (
         scored.withColumn("rank", F.row_number().over(topk_w))
         .filter(F.col("rank") <= k)
+        .select(*RESULT_COLUMNS, *([crowding_col] if crowding_col else []))
     )
+
+
+def _scan_schema(
+    candidates: DataFrame, id_col: str, query_id_type,
+    crowding_col: str | None,
+) -> T.StructType:
+    schema = T.StructType([
+        T.StructField("query_id", query_id_type),
+        T.StructField("neighbor_id", candidates.schema[id_col].dataType),
+        T.StructField("score", T.DoubleType()),
+    ])
+    if crowding_col:
+        schema.add(crowding_col, candidates.schema[crowding_col].dataType)
+    return schema
+
+
+def _scan_cols(*cols: str | None) -> list[str]:
+    """Candidate columns a scan reads, each once (a crowding column may
+    also be the cluster column)."""
+    return list(dict.fromkeys(c for c in cols if c))
+
+
+def _collect_queries(
+    queries_df: DataFrame, query_id_col: str, query_vec_col: str
+) -> tuple[list, np.ndarray]:
+    """The driver-held query set of the broadcast strategy: (ids, the
+    (nq, dim) float64 query matrix)."""
+    rows = queries_df.select(query_id_col, query_vec_col).collect()
+    return (
+        [r[0] for r in rows],
+        np.asarray([r[1] for r in rows], dtype=np.float64),
+    )
+
+
+def block_topk_broadcast(
+    candidates: DataFrame,
+    qids: list,
+    qmat: np.ndarray,
+    k: int,
+    scorer: Scorer,
+    *,
+    id_col: str,
+    query_id_type,
+    probe_mask: np.ndarray | None = None,
+    per_crowding_k: int | None = None,
+    crowding_col: str | None = None,
+) -> DataFrame:
+    """Block top-k over ``candidates`` for a driver-held query set
+    (``qids``, ``qmat``; see ``_collect_queries``).
+
+    ``scorer.prepare`` runs once on the driver and its output ships
+    with ``qids`` and the optional ``probe_mask`` (nq x n_clusters
+    bool, read against ``cluster_id``) via ``SparkContext.broadcast``;
+    one ``mapInPandas`` pass scores each Arrow batch and keeps its
+    local winners, and ``_ranked`` applies the global window. Returns
+    (query_id, rank, neighbor_id, score[, crowding_col]).
+    """
+    spark = candidates.sparkSession
+    schema = _scan_schema(candidates, id_col, query_id_type, crowding_col)
+    if not qids:
+        return _ranked(
+            spark.createDataFrame([], schema), k, per_crowding_k, crowding_col
+        )
+    bc = spark.sparkContext.broadcast(
+        (qids, scorer.prepare(qmat), probe_mask)
+    )
+    col, score = scorer.col, scorer.score
+    kw = dict(id_col=id_col, per_crowding_k=per_crowding_k,
+              crowding_col=crowding_col)
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        b_qids, state, b_mask = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            out = _local_topk(
+                b_qids, score(state, pdf[col]), pdf, k, probe_mask=b_mask,
+                **kw,
+            )
+            if out is not None:
+                yield out
+
+    cols = _scan_cols(id_col, col, crowding_col,
+                      None if probe_mask is None else "cluster_id")
+    scored = candidates.select(*cols).mapInPandas(scan, schema)
+    return _ranked(scored, k, per_crowding_k, crowding_col)
+
+
+def block_topk_cogroup(
+    candidates: DataFrame,
+    queries_df: DataFrame,
+    k: int,
+    scorer: Scorer,
+    *,
+    id_col: str,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vector",
+    probe_col: str | None = None,
+    n_clusters: int | None = None,
+    per_crowding_k: int | None = None,
+    crowding_col: str | None = None,
+    n_index_blocks: int | None = None,
+    n_query_blocks: int = 1,
+) -> DataFrame:
+    """Block top-k with NO driver collect anywhere.
+
+    Both sides stay DataFrames end-to-end: the candidates hash into
+    ``n_index_blocks`` (default: defaultParallelism), each query row
+    replicates across those blocks (``explode`` through the shuffle --
+    queries are the small side, so replicating them is the cheap
+    direction), and every ``cogroup().applyInPandas`` group runs
+    ``scorer.prepare`` on its queries, scores its candidates and keeps
+    the local winners. ``n_query_blocks > 1`` additionally splits
+    queries (replicating the candidates per query block) to bound
+    per-task memory for data-scale query sets. Each (query, candidate)
+    pair lands in exactly one group, so the union of local winners
+    feeds the global ``_ranked`` window without dedup.
+
+    IVF masking: pass ``probe_col`` (array<int> probed clusters per
+    query) and ``n_clusters``; the mask is rebuilt per group against
+    the candidates' ``cluster_id``, still with no driver state.
+    Returns (query_id, rank, neighbor_id, score[, crowding_col]).
+    """
+    spark = candidates.sparkSession
+    if n_index_blocks is None:
+        n_index_blocks = spark.sparkContext.defaultParallelism
+    if probe_col is not None and n_clusters is None:
+        raise ValueError("probe_col requires n_clusters")
+
+    # Both sides' grouping keys are explicitly bigint: pmod(xxhash64)
+    # is bigint while exploded int literals are int, and cogroup key
+    # matching must not lean on implicit coercion.
+    idx = candidates.select(*_scan_cols(
+        id_col, scorer.col, crowding_col,
+        None if probe_col is None else "cluster_id",
+    )).withColumn(
+        "_ib", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_index_blocks))
+    )
+    if n_query_blocks > 1:
+        idx = idx.withColumn(
+            "_qb",
+            F.explode(F.array(*[F.lit(i).cast("bigint")
+                                for i in range(n_query_blocks)])),
+        )
+        qb_expr = F.pmod(F.xxhash64(F.col(query_id_col)), F.lit(n_query_blocks))
+    else:
+        idx = idx.withColumn("_qb", F.lit(0).cast("bigint"))
+        qb_expr = F.lit(0).cast("bigint")
+    qcols = [query_id_col, query_vec_col] + ([probe_col] if probe_col else [])
+    qry = queries_df.select(*qcols).withColumn("_qb", qb_expr).withColumn(
+        "_ib", F.explode(F.array(*[F.lit(i).cast("bigint")
+                                   for i in range(n_index_blocks)]))
+    )
+
+    schema = _scan_schema(
+        candidates, id_col, queries_df.schema[query_id_col].dataType,
+        crowding_col,
+    )
+    empty = pd.DataFrame({f.name: pd.Series(dtype=object) for f in schema})
+    kw = dict(id_col=id_col, per_crowding_k=per_crowding_k,
+              crowding_col=crowding_col)
+
+    def scan_group(ipdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
+        if ipdf.empty or qpdf.empty:
+            return empty
+        qmat = np.asarray(list(qpdf[query_vec_col]), dtype=np.float64)
+        probe_mask = None
+        if probe_col:
+            probe_mask = np.zeros((len(qpdf), n_clusters), dtype=bool)
+            for i, lst in enumerate(qpdf[probe_col]):
+                probe_mask[i, np.asarray(lst, dtype=np.int64)] = True
+        out = _local_topk(
+            qpdf[query_id_col].to_numpy(),
+            scorer.score(scorer.prepare(qmat), ipdf[scorer.col]),
+            ipdf, k, probe_mask=probe_mask, **kw,
+        )
+        return empty if out is None else out
+
+    scored = (
+        idx.groupby("_ib", "_qb")
+        .cogroup(qry.groupby("_ib", "_qb"))
+        .applyInPandas(scan_group, schema)
+    )
+    return _ranked(scored, k, per_crowding_k, crowding_col)
 
 
 def knn_search(
@@ -224,20 +447,24 @@ def knn_search(
         index_df = index_df.filter(restrict)
 
     extra_cols = [crowding_col] if crowding_col else []
+    crowding = dict(per_crowding_k=per_crowding_k, crowding_col=crowding_col)
 
     if method == "gemm":
-        scored = _gemm_score_local_topk(
-            index_df, queries_df, k,
-            id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col, query_vec_col=query_vec_col,
-            per_crowding_k=per_crowding_k, crowding_col=crowding_col,
+        qids, qmat = _collect_queries(queries_df, query_id_col, query_vec_col)
+        # Spread the GEMM across cores when the index arrived as few files.
+        par = index_df.sparkSession.sparkContext.defaultParallelism
+        if index_df.rdd.getNumPartitions() < par:
+            index_df = index_df.repartition(par)
+        out = block_topk_broadcast(
+            index_df, qids, qmat, k, dot_scorer(vec_col), id_col=id_col,
+            query_id_type=queries_df.schema[query_id_col].dataType,
+            **crowding,
         )
     elif method == "gemm_join":
-        scored = gemm_topk_cogroup(
-            index_df, queries_df, k,
-            id_col=id_col, vec_col=vec_col,
+        out = block_topk_cogroup(
+            index_df, queries_df, k, dot_scorer(vec_col), id_col=id_col,
             query_id_col=query_id_col, query_vec_col=query_vec_col,
-            per_crowding_k=per_crowding_k, crowding_col=crowding_col,
+            **crowding,
         )
     else:
         q = queries_df.select(
@@ -253,10 +480,7 @@ def knn_search(
                 *extra_cols,
             )
         )
-
-    out = _ranked(scored, k, per_crowding_k, crowding_col).select(
-        "query_id", "rank", "neighbor_id", "score", *extra_cols
-    )
+        out = _ranked(scored, k, per_crowding_k, crowding_col)
 
     if metadata_df is not None:
         # Hydration join (Q7): the top-k result is tiny -- broadcast it,
@@ -270,191 +494,6 @@ def knn_search(
         ).select("query_id", "rank", "neighbor_id", "score",
                  *keep_extra, *meta_cols)
     return out
-
-
-def _gemm_score_local_topk(
-    index_df: DataFrame,
-    queries_df: DataFrame,
-    k: int,
-    *,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    per_crowding_k: int | None,
-    crowding_col: str | None,
-) -> DataFrame:
-    """Score with one float64 GEMM per Arrow batch; emit only local winners.
-
-    The query matrix is materialized on the driver and shipped with
-    ``SparkContext.broadcast`` -- the same mechanism (driver collect +
-    torrent broadcast, one copy per executor) Spark's BroadcastExchange
-    uses for the build side of a broadcast join. Query sets too large
-    to materialize on the driver at all should use ``gemm_topk_cogroup``
-    (no driver collect, costs an index shuffle) or knn_search_blocked.
-    """
-    from pyspark.sql import types as T
-
-    qid_type = queries_df.schema[query_id_col].dataType
-    nid_type = index_df.schema[id_col].dataType
-    out_schema = T.StructType([
-        T.StructField("query_id", qid_type),
-        T.StructField("neighbor_id", nid_type),
-        T.StructField("score", T.DoubleType()),
-    ])
-    if crowding_col:
-        out_schema.add(crowding_col, index_df.schema[crowding_col].dataType)
-
-    rows = queries_df.select(query_id_col, query_vec_col).collect()
-    if not rows:
-        return index_df.sparkSession.createDataFrame([], out_schema)
-    bc = index_df.sparkSession.sparkContext.broadcast(
-        ([r[0] for r in rows],
-         np.asarray([r[1] for r in rows], dtype=np.float64))  # (nq, dim)
-    )
-
-    cols = [id_col, vec_col] + ([crowding_col] if crowding_col else [])
-
-    # Spread the GEMM across cores when the index arrived as few files.
-    par = index_df.sparkSession.sparkContext.defaultParallelism
-    if index_df.rdd.getNumPartitions() < par:
-        index_df = index_df.repartition(par)
-
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, qmat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            frames = _score_block(
-                qids, qmat,
-                pdf[id_col].to_numpy(),
-                np.asarray(list(pdf[vec_col]), dtype=np.float64),
-                k,
-                crowd=pdf[crowding_col].to_numpy() if crowding_col else None,
-                per_crowding_k=per_crowding_k, crowding_col=crowding_col,
-            )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return index_df.select(*cols).mapInPandas(score_batches, out_schema)
-
-
-def gemm_topk_cogroup(
-    index_df: DataFrame,
-    queries_df: DataFrame,
-    k: int,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vector",
-    per_crowding_k: int | None = None,
-    crowding_col: str | None = None,
-    n_index_blocks: int | None = None,
-    n_query_blocks: int = 1,
-    probe_col: str | None = None,
-    cluster_col: str | None = None,
-    n_clusters: int | None = None,
-) -> DataFrame:
-    """Fully-distributed block GEMM scoring: NO driver collect anywhere.
-
-    Both sides stay DataFrames end-to-end: the index hashes into
-    ``n_index_blocks``, each query row replicates across those blocks
-    (``explode`` through the shuffle -- queries are the small side, so
-    replicating them is the cheap direction), and every
-    ``cogroup().applyInPandas`` group runs one GEMM + exact local
-    top-k via ``_score_block``. ``n_query_blocks > 1`` additionally
-    splits queries (replicating the index per query block) to bound
-    per-task memory for data-scale query sets.
-
-    Each (query, vector) pair lands in exactly one cogroup, so the
-    union of local winners needs no dedup before the global window
-    (applied by the caller via ``_ranked``).
-
-    IVF masking: pass ``probe_col`` (array<int> probed clusters per
-    query), ``cluster_col`` and ``n_clusters`` -- the mask is rebuilt
-    per group from the probe column, still with no driver state.
-
-    Returns the scored-candidates DataFrame (query_id, neighbor_id,
-    score[, crowding_col]).
-    """
-    from pyspark.sql import types as T
-
-    spark = index_df.sparkSession
-    if n_index_blocks is None:
-        n_index_blocks = spark.sparkContext.defaultParallelism
-    if probe_col is not None and (cluster_col is None or n_clusters is None):
-        raise ValueError("probe_col requires cluster_col and n_clusters")
-
-    icols = [id_col, vec_col]
-    if crowding_col:
-        icols.append(crowding_col)
-    if cluster_col:
-        icols.append(cluster_col)
-    # Both sides' grouping keys are explicitly bigint: pmod(xxhash64)
-    # is bigint while exploded int literals are int, and cogroup key
-    # matching must not lean on implicit coercion.
-    idx = index_df.select(*icols).withColumn(
-        "_ib", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_index_blocks))
-    )
-    if n_query_blocks > 1:
-        idx = idx.withColumn(
-            "_qb",
-            F.explode(F.array(*[F.lit(i).cast("bigint")
-                                for i in range(n_query_blocks)])),
-        )
-        qb_expr = F.pmod(F.xxhash64(F.col(query_id_col)), F.lit(n_query_blocks))
-    else:
-        idx = idx.withColumn("_qb", F.lit(0).cast("bigint"))
-        qb_expr = F.lit(0).cast("bigint")
-
-    qcols = [query_id_col, query_vec_col]
-    if probe_col:
-        qcols.append(probe_col)
-    qry = queries_df.select(*qcols).withColumn("_qb", qb_expr).withColumn(
-        "_ib", F.explode(F.array(*[F.lit(i).cast("bigint")
-                                   for i in range(n_index_blocks)]))
-    )
-
-    out_schema = T.StructType([
-        T.StructField("query_id", queries_df.schema[query_id_col].dataType),
-        T.StructField("neighbor_id", index_df.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-    if crowding_col:
-        out_schema.add(crowding_col, index_df.schema[crowding_col].dataType)
-    empty = pd.DataFrame({f.name: pd.Series(dtype=object) for f in out_schema})
-
-    def score_group(ipdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        if ipdf.empty or qpdf.empty:
-            return empty
-        qids = qpdf[query_id_col].to_numpy()
-        qmat = np.asarray(list(qpdf[query_vec_col]), dtype=np.float64)
-        probe_mask = None
-        clusters = None
-        if probe_col:
-            probe_mask = np.zeros((len(qids), n_clusters), dtype=bool)
-            for i, lst in enumerate(qpdf[probe_col]):
-                probe_mask[i, np.asarray(lst, dtype=np.int64)] = True
-            clusters = ipdf[cluster_col].to_numpy()
-        frames = _score_block(
-            qids, qmat,
-            ipdf[id_col].to_numpy(),
-            np.asarray(list(ipdf[vec_col]), dtype=np.float64),
-            k,
-            crowd=ipdf[crowding_col].to_numpy() if crowding_col else None,
-            per_crowding_k=per_crowding_k, crowding_col=crowding_col,
-            probe_mask=probe_mask, clusters=clusters,
-        )
-        if not frames:
-            return empty
-        return pd.concat(frames, ignore_index=True)
-
-    return (
-        idx.groupby("_ib", "_qb")
-        .cogroup(qry.groupby("_ib", "_qb"))
-        .applyInPandas(score_group, out_schema)
-    )
 
 
 def knn_search_cosine(
@@ -553,56 +592,3 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact-scan baseline (alias of knn_search with the fold strategy)."""
     return knn_search(index_df, queries_df, k, method="fold", **kwargs)
-
-
-def knn_search_blocked(
-    index_df: DataFrame,
-    queries_df: DataFrame,
-    k: int,
-    *,
-    query_id_col: str = "query_id",
-    max_queries_per_block: int = 4096,
-    **kwargs,
-) -> DataFrame:
-    """Exact GEMM kNN for query sets too large to ship in one closure.
-
-    The gemm strategy holds the whole query matrix per task; past ~1e5
-    x 768-dim queries (~600 MB) that stops scaling. This splits the
-    query set into blocks of ``max_queries_per_block``, runs the gemm
-    search per block, and unions the plans -- Spark schedules the block
-    jobs back-to-back over the same cached index scan, so peak task
-    memory is bounded by one block while total work stays one GEMM per
-    (block x batch). Deterministic block assignment = hash(query_id) so
-    re-runs are stable.
-    """
-    from pyspark.sql import functions as F
-
-    n_blocks_row = queries_df.select(
-        (F.count(F.lit(1)) / max_queries_per_block).alias("b")
-    ).first()
-    import math
-
-    n_blocks = max(1, math.ceil(n_blocks_row.b))
-    if n_blocks == 1:
-        return knn_search(
-            index_df, queries_df, k, query_id_col=query_id_col,
-            method="gemm", **kwargs,
-        )
-    blocked = queries_df.withColumn(
-        "_qblock", F.pmod(F.hash(F.col(query_id_col)), F.lit(n_blocks))
-    )
-    parts = [
-        knn_search(
-            index_df,
-            blocked.filter(F.col("_qblock") == b).drop("_qblock"),
-            k,
-            query_id_col=query_id_col,
-            method="gemm",
-            **kwargs,
-        )
-        for b in range(n_blocks)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

@@ -22,11 +22,10 @@ quality high. Spark mapping:
   vector to an m-byte ``binary`` code. No shuffle.
 - **search (ADC)**: per query build an (m x ksub) table of partial dot
   products <q_sub, codeword>; the score of a code is the sum of m
-  table lookups. ``mapInPandas`` over code partitions with the LUT
-  tensor broadcast (torrent, one fetch per executor), exact local
-  top-k per query before the global window -- the shuffle carries at
-  most ``n_queries * k`` rows per partition, identical plan shape to
-  knn_search(method="gemm").
+  table lookups. ADC is one more scorer (``adc_scorer``) of the block
+  top-k kernel in knn.py: the same strategies and the same exact local
+  top-k as knn_search's "gemm"/"gemm_join", with the LUT in place of
+  the query matrix.
 - **re-rank**: ADC top-``rerank_candidates`` ids (a tiny result) are
   broadcast-joined back to the exact vectors and re-scored with the
   bit-exact fold dot product -- the standard PQ + exact-rerank
@@ -40,6 +39,7 @@ tests/test_pq.py (ADC-only and reranked recall vs exact kNN).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -48,7 +48,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.vector import dot_product
-from .knn import _ranked
+from .knn import (
+    Scorer,
+    _collect_queries,
+    _ranked,
+    _resolve_query_method,
+    block_topk_broadcast,
+    block_topk_cogroup,
+)
 
 
 @dataclass
@@ -470,53 +477,24 @@ def _lut_for(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     ], axis=1)
 
 
-def _adc_frames(
-    qids,
-    lut: np.ndarray,
-    ids,
-    codes: np.ndarray,
-    k: int,
-    *,
-    probe_mask: np.ndarray | None = None,
-    clusters=None,
-) -> list[pd.DataFrame]:
-    """Score one (nq, m, ksub) LUT against an (n, m) uint8 code block:
-    m vectorized gathers (no GEMM, no float vectors read), then exact
-    local top-k per query with the same (score desc, id asc) tie-break
-    the global window applies.
-
-    ``probe_mask`` (nq x n_clusters bool) + ``clusters`` (per-code
-    cluster id) restrict each query to ITS probed leaves -- the ADC
-    candidate set is then independent of batch composition (mirrors
-    knn._score_block's IVF masking).
-    """
-    nq, n = len(qids), codes.shape[0]
-    m = codes.shape[1]
-    scores = np.zeros((nq, n))
+def _adc(lut: np.ndarray, codes: pd.Series) -> np.ndarray:
+    """Score an (nq, m, ksub) LUT against a block of m-byte codes:
+    unpack to an (n, m) uint8 matrix, then m vectorized gathers (no
+    GEMM, no float vectors read) -> (nq, n)."""
+    m = lut.shape[1]
+    cmat = np.frombuffer(b"".join(codes), dtype=np.uint8).reshape(-1, m)
+    scores = np.zeros((lut.shape[0], len(cmat)))
     for j in range(m):
-        scores += lut[:, j, :][:, codes[:, j]]
-    if probe_mask is not None:
-        allowed = probe_mask[:, clusters]  # (nq, n)
-        scores = np.where(allowed, scores, -np.inf)
-    frames: list[pd.DataFrame] = []
-    for qi in range(nq):
-        s = scores[qi]
-        if probe_mask is not None:
-            n_valid = int((s > -np.inf).sum())
-            if n_valid == 0:
-                continue
-        else:
-            n_valid = n
-        top = min(k, n_valid)
-        cand = np.argpartition(s, n - top)[n - top:]
-        order = np.lexsort((ids[cand], -s[cand]))[:top]
-        idx = cand[order]
-        frames.append(pd.DataFrame({
-            "query_id": qids[qi],
-            "neighbor_id": ids[idx],
-            "score": s[idx],
-        }))
-    return frames
+        scores += lut[:, j, :][:, cmat[:, j]]
+    return scores
+
+
+def adc_scorer(books: PQCodebooks) -> Scorer:
+    """The block top-k kernel's ADC scorer (knn.py): prepare = the
+    per-query lookup table, score = the gather sum over ``pq_code``."""
+    return Scorer(
+        "pq_code", partial(_lut_for, codebooks=books.codebooks), _adc
+    )
 
 
 def pq_topk(
@@ -526,190 +504,19 @@ def pq_topk(
     *,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vector",
-    probe_col: str | None = None,
-    cluster_col: str = "cluster_id",
-    n_clusters: int | None = None,
-    _rows: list | None = None,
 ) -> DataFrame:
-    """Asymmetric-distance top-k over the encoded corpus.
-
-    Per Arrow batch of codes: unpack to a (n, m) uint8 matrix, gather
-    ``sum_j LUT[q, j, codes[:, j]]`` for every query, exact local
-    top-k, then the global rank window. Returns (query_id, rank,
-    neighbor_id, score) where score is the ADC approximation of the
-    dot product.
-
-    ``probe_col`` (an array<int> column of probed leaf ids on the query
-    side, with ``cluster_col`` on ``index.codes`` and ``n_clusters``)
-    masks each query to its own probed leaves so results don't depend
-    on which other queries share the batch.
+    """Asymmetric-distance top-k over the encoded corpus: the block
+    top-k kernel's broadcast strategy with the ADC scorer. The query
+    set is collected once, the LUT is built once on the driver and
+    broadcast, and one ``mapInPandas`` pass scores the codes. Returns
+    (query_id, rank, neighbor_id, score) where score is the ADC
+    approximation of the dot product.
     """
-    spark = queries_df.sparkSession
-    books = index.books
-    m = books.m
-    if probe_col is not None and n_clusters is None:
-        raise ValueError("probe_col requires n_clusters")
-
-    qcols = [query_id_col, query_vec_col] + (
-        [probe_col] if probe_col else []
-    )
-    # _rows: the caller (ivf_pq_search broadcast path) already holds
-    # the collected query set -- skip the second collect, which on an
-    # RDD-backed query relation is a full defaultParallelism-task job
-    # per request (r12 serving-latency profile).
-    rows = _rows if _rows is not None else (
-        queries_df.select(*qcols).collect()
-    )
-    out_schema = T.StructType([
-        T.StructField("query_id", queries_df.schema[query_id_col].dataType),
-        T.StructField("neighbor_id", index.codes.schema[index.id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-    if not rows:
-        return (
-            spark.createDataFrame([], out_schema)
-            .withColumn("rank", F.lit(0))
-            .select("query_id", "rank", "neighbor_id", "score")
-        )
-    qids = [r[0] for r in rows]
-    qmat = np.asarray([r[1] for r in rows], dtype=np.float64)  # (nq, dim)
-    lut = _lut_for(qmat, books.codebooks)  # (nq, m, ksub)
-    probe_mask = None
-    if probe_col is not None:
-        probe_mask = np.zeros((len(qids), n_clusters), dtype=bool)
-        for i, r in enumerate(rows):
-            probe_mask[i, np.asarray(r[2], dtype=np.int64)] = True
-    bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
-    id_col = index.id_col
-
-    code_cols = [id_col, "pq_code"] + (
-        [cluster_col] if probe_col is not None else []
-    )
-
-    def score(batches):
-        b_qids, b_lut, b_mask = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf["pq_code"]), dtype=np.uint8
-            ).reshape(len(pdf), m)
-            frames = _adc_frames(
-                b_qids, b_lut, pdf[id_col].to_numpy(), codes, k,
-                probe_mask=b_mask,
-                clusters=(
-                    pdf[cluster_col].to_numpy() if b_mask is not None else None
-                ),
-            )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = index.codes.select(*code_cols).mapInPandas(score, out_schema)
-    return _ranked(scored, k, None, None).select(
-        "query_id", "rank", "neighbor_id", "score"
-    )
-
-
-def pq_topk_cogroup(
-    index: PQIndex,
-    queries_df: DataFrame,
-    k: int,
-    *,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vector",
-    probe_col: str | None = None,
-    cluster_col: str = "cluster_id",
-    n_clusters: int | None = None,
-    n_index_blocks: int | None = None,
-    n_query_blocks: int = 1,
-) -> DataFrame:
-    """Collect-free ADC top-k: NO query row ever touches the driver.
-
-    Mirrors knn.gemm_topk_cogroup's block partitioning: the code table
-    hashes into ``n_index_blocks``, queries replicate across the blocks
-    (queries are the small side to ship; ``n_query_blocks > 1`` splits
-    them and replicates the codes instead to bound per-task memory),
-    and each ``cogroup().applyInPandas`` group builds its LUT locally
-    from the broadcast codebook tensor and runs the gather scoring +
-    exact local top-k. Each (query, code) pair lands in exactly one
-    cogroup, so the union of local winners feeds the global rank window
-    without dedup. Use for data-scale query sets; request-scale sets
-    should prefer pq_topk (streams the codes in place, no shuffle).
-    """
-    spark = queries_df.sparkSession
-    books = index.books
-    m = books.m
-    if probe_col is not None and n_clusters is None:
-        raise ValueError("probe_col requires n_clusters")
-    if n_index_blocks is None:
-        n_index_blocks = spark.sparkContext.defaultParallelism
-    bc_books = spark.sparkContext.broadcast(books.codebooks)
-    id_col = index.id_col
-
-    code_cols = [id_col, "pq_code"] + (
-        [cluster_col] if probe_col is not None else []
-    )
-    # Both sides' grouping keys are explicitly bigint: pmod(xxhash64)
-    # is bigint while exploded int literals are int, and cogroup key
-    # matching must not lean on implicit coercion.
-    idx = index.codes.select(*code_cols).withColumn(
-        "_ib", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_index_blocks))
-    )
-    if n_query_blocks > 1:
-        idx = idx.withColumn(
-            "_qb",
-            F.explode(F.array(*[F.lit(i).cast("bigint")
-                                for i in range(n_query_blocks)])),
-        )
-        qb_expr = F.pmod(F.xxhash64(F.col(query_id_col)), F.lit(n_query_blocks))
-    else:
-        idx = idx.withColumn("_qb", F.lit(0).cast("bigint"))
-        qb_expr = F.lit(0).cast("bigint")
-
-    qcols = [query_id_col, query_vec_col] + ([probe_col] if probe_col else [])
-    qry = queries_df.select(*qcols).withColumn("_qb", qb_expr).withColumn(
-        "_ib", F.explode(F.array(*[F.lit(i).cast("bigint")
-                                   for i in range(n_index_blocks)]))
-    )
-
-    out_schema = T.StructType([
-        T.StructField("query_id", queries_df.schema[query_id_col].dataType),
-        T.StructField("neighbor_id", index.codes.schema[id_col].dataType),
-        T.StructField("score", T.DoubleType()),
-    ])
-    empty = pd.DataFrame({f.name: pd.Series(dtype=object) for f in out_schema})
-
-    def score_group(ipdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        if ipdf.empty or qpdf.empty:
-            return empty
-        qids = qpdf[query_id_col].to_numpy()
-        qmat = np.asarray(list(qpdf[query_vec_col]), dtype=np.float64)
-        lut = _lut_for(qmat, bc_books.value)
-        probe_mask = None
-        clusters = None
-        if probe_col:
-            probe_mask = np.zeros((len(qids), n_clusters), dtype=bool)
-            for i, lst in enumerate(qpdf[probe_col]):
-                probe_mask[i, np.asarray(lst, dtype=np.int64)] = True
-            clusters = ipdf[cluster_col].to_numpy()
-        codes = np.frombuffer(
-            b"".join(ipdf["pq_code"]), dtype=np.uint8
-        ).reshape(len(ipdf), m)
-        frames = _adc_frames(
-            qids, lut, ipdf[id_col].to_numpy(), codes, k,
-            probe_mask=probe_mask, clusters=clusters,
-        )
-        if not frames:
-            return empty
-        return pd.concat(frames, ignore_index=True)
-
-    scored = (
-        idx.groupby("_ib", "_qb")
-        .cogroup(qry.groupby("_ib", "_qb"))
-        .applyInPandas(score_group, out_schema)
-    )
-    return _ranked(scored, k, None, None).select(
-        "query_id", "rank", "neighbor_id", "score"
+    qids, qmat = _collect_queries(queries_df, query_id_col, query_vec_col)
+    return block_topk_broadcast(
+        index.codes, qids, qmat, k, adc_scorer(index.books),
+        id_col=index.id_col,
+        query_id_type=queries_df.schema[query_id_col].dataType,
     )
 
 
@@ -755,103 +562,69 @@ def ivf_pq_search(
     share the batch. The rerank then touches only the shortlist's full
     vectors.
 
-    ``method``: "broadcast" ships the query set via
-    SparkContext.broadcast (request-scale); "cogroup" keeps queries
-    distributed end-to-end (data-scale, no driver collect).
-
-    Probe assignment is path-matched to where the query matrix lives
-    (r11, the ivf_search gemm-path economics applied to the cascade):
-    the broadcast path collects the query set to the driver anyway, so
-    probes compute driver-side in numpy (_probe_assign_np -- the same
-    function the executor UDF wraps, so rankings are identical) and
-    the whole pre-ADC stage is ONE cheap collect instead of two
-    probe-UDF jobs (the old path ran the UDF once for the distinct
-    probed-leaf collect and again inside pq_topk's query collect --
-    at request scale those job launches dominate the serving latency).
-    The cogroup path keeps the executor-side UDF so the query set
-    never touches the driver; its one collect stays the bounded
-    distinct probed-cluster-id set.
+    ``method``: "broadcast" (request-scale) is the block top-k
+    kernel's broadcast strategy: the query set is collected once,
+    probes rank driver-side in numpy (``ivf._probe_on_driver``; the
+    same function the executor UDF wraps, so rankings are identical),
+    and the LUT is built once and broadcast -- no probe-UDF job at all,
+    which at request scale is most of the serving latency. "cogroup"
+    (data-scale) is the kernel's cogroup strategy: probes run in the
+    executor UDF (``ivf._probe_on_executors``) so the query set never
+    touches the driver; its one collect is the bounded distinct
+    probed-cluster-id set.
 
     Recall compounds (probe recall x ADC recall recovered by rerank) --
     gated in tests/test_pq.py on clustered data.
     """
-    from .ivf import _probe_assign_np, _probe_assign_udf
-    from .knn import _resolve_query_method
+    from .ivf import _probe_assign_udf, _probe_on_driver, _probe_on_executors
 
     method = _resolve_query_method(
         queries_df, method, small="broadcast", large="cogroup",
         threshold=auto_threshold,
     )
+    broadcast = method != "cogroup"
     n_clusters = ivf_index.centroids.shape[0]
     nprobe = max(1, int(round(n_clusters * probe_percent / 100.0)))
-    prows = None
-    if method == "broadcast":
-        # driver-side probes: one collect, zero probe-UDF jobs. The
-        # float32 -> float64 vector materialization is exact, and the
-        # rerank's fold casts to double anyway, so scores are
-        # bit-identical to the UDF path.
-        rows = queries_df.select(
-            F.col(query_id_col), F.col(query_vec_col)
-        ).collect()
-        spark = queries_df.sparkSession
-        schema = T.StructType([
-            T.StructField(
-                "query_id", queries_df.schema[query_id_col].dataType
-            ),
-            T.StructField(
-                "query_vector", T.ArrayType(T.DoubleType())
-            ),
-            T.StructField("_probe", T.ArrayType(T.IntegerType())),
-        ])
-        if rows:
-            qmat = np.asarray([r[1] for r in rows], dtype=np.float64)
-            probes = _probe_assign_np(qmat, ivf_index.centroids, nprobe)
-            prows = [
-                (r[0], [float(x) for x in r[1]], [int(c) for c in p])
-                for r, p in zip(rows, probes)
-            ]
-            # pandas + Arrow => a true LocalRelation: collect() on it
-            # is driver-only and its broadcast-join side needs no job.
-            # A plain createDataFrame(list) builds a LogicalRDD whose
-            # every collect is a defaultParallelism-task job (~0.35 s
-            # of the warm serving latency, measured r12).
-            probed_q = spark.createDataFrame(
-                pd.DataFrame({
-                    "query_id": [r[0] for r in rows],
-                    "query_vector": [
-                        [float(x) for x in r[1]] for r in rows
-                    ],
-                    "_probe": [[int(c) for c in p] for p in probes],
-                }),
-                schema,
-            )
-            all_probed = sorted({int(c) for p in probes for c in p})
-        else:
-            probed_q = spark.createDataFrame([], schema)
-            all_probed = []
+    if broadcast:
+        qids, qmat, probe_mask, all_probed = _probe_on_driver(
+            queries_df, query_id_col, query_vec_col,
+            ivf_index.centroids, nprobe,
+        )
+        # pandas + Arrow => a true LocalRelation: collect() on it is
+        # driver-only and its broadcast-join side needs no job. A plain
+        # createDataFrame(list) builds a LogicalRDD whose every collect
+        # is a defaultParallelism-task job (~0.35 s of the warm serving
+        # latency, measured r12).
+        q = queries_df.sparkSession.createDataFrame(
+            pd.DataFrame({"query_id": qids, "_qvec": qmat.tolist()}),
+            T.StructType([
+                T.StructField(
+                    "query_id", queries_df.schema[query_id_col].dataType
+                ),
+                T.StructField("_qvec", T.ArrayType(T.DoubleType())),
+            ]),
+        )
     else:
-        probed_q = queries_df.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("query_vector"),
-        ).withColumn(
-            "_probe",
-            _probe_assign_udf(ivf_index.centroids, nprobe)(
-                F.col("query_vector")
-            ),
+        q, all_probed = _probe_on_executors(
+            queries_df, query_id_col, query_vec_col,
+            _probe_assign_udf(ivf_index.centroids, nprobe),
         )
-        # Static prune: union of probed leaves, <= n_clusters ints no
-        # matter the query count (bounded collect, same as ivf_search).
-        all_probed = sorted(
-            r[0] for r in
-            probed_q.select(
-                F.explode("_probe").alias("c")
-            ).distinct().collect()
+    codes = pq_index.codes.filter(F.col("cluster_id").isin(all_probed))
+    if restrict is not None:
+        codes = codes.filter(restrict)
+    cand_k = rerank_candidates if rerank_candidates is not None else 4 * k
+    scorer = adc_scorer(pq_index.books)
+    if broadcast:
+        cands = block_topk_broadcast(
+            codes, qids, qmat, cand_k, scorer, id_col=pq_index.id_col,
+            query_id_type=queries_df.schema[query_id_col].dataType,
+            probe_mask=probe_mask,
         )
-    candidates = PQIndex(
-        codes=pq_index.codes.filter(F.col("cluster_id").isin(all_probed)),
-        books=pq_index.books,
-        id_col=pq_index.id_col,
-    )
+    else:
+        cands = block_topk_cogroup(
+            codes, q, cand_k, scorer, id_col=pq_index.id_col,
+            query_vec_col="_qvec", probe_col="_probe", n_clusters=n_clusters,
+        )
     # Prune the RERANK scan to the probed leaves too (r12): the ADC
     # shortlist only ever contains probed-leaf rows and the rerank
     # join is inner on neighbor_id, so rows outside all_probed can
@@ -862,22 +635,11 @@ def ivf_pq_search(
     vectors = ivf_index.assigned
     if "cluster_id" in vectors.columns:
         vectors = vectors.filter(F.col("cluster_id").isin(all_probed))
-    return pq_search_rerank(
-        candidates,
-        vectors,
-        probed_q,
-        k,
-        rerank_candidates=rerank_candidates,
-        id_col=ivf_index.id_col,
-        vec_col=ivf_index.vec_col,
-        probe_col="_probe",
-        n_clusters=n_clusters,
-        method=method,
-        restrict=restrict,
-        per_crowding_k=per_crowding_k,
-        crowding_col=crowding_col,
-        auto_threshold=auto_threshold,
-        _rows=prows,
+    return _rerank(
+        cands, vectors, q, k,
+        id_col=ivf_index.id_col, vec_col=ivf_index.vec_col,
+        broadcast=broadcast,
+        per_crowding_k=per_crowding_k, crowding_col=crowding_col,
     )
 
 
@@ -892,14 +654,11 @@ def pq_search_rerank(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vector",
-    probe_col: str | None = None,
-    n_clusters: int | None = None,
     method: str = "auto",
     restrict=None,
     per_crowding_k: int | None = None,
     crowding_col: str | None = None,
     auto_threshold: int | None = None,
-    _rows: list | None = None,
 ) -> DataFrame:
     """The production cascade: ADC top-``rerank_candidates`` (default
     4k, mirroring approximate_neighbors_count=150 vs final k in the
@@ -908,13 +667,14 @@ def pq_search_rerank(
     Only ``n_queries * rerank_candidates`` full vectors are ever
     re-read.
 
-    ``method="broadcast"`` (request-scale): queries ship via
-    SparkContext.broadcast for ADC and the tiny candidate/query sides
-    are broadcast-joined into the vector scan. ``method="cogroup"``
-    (data-scale): ADC runs through pq_topk_cogroup (no driver collect
-    anywhere) and the rerank joins stay shuffle joins so AQE picks the
-    strategy from actual sizes. ``method="auto"`` (default) counts the
-    query side and picks "broadcast" at or under ``auto_threshold``
+    ``method="broadcast"`` (request-scale): ADC runs through pq_topk
+    (the block top-k kernel's broadcast strategy) and the tiny
+    candidate/query sides are broadcast-joined into the vector scan.
+    ``method="cogroup"`` (data-scale): ADC runs through the kernel's
+    cogroup strategy (no driver collect anywhere) and the rerank joins
+    stay shuffle joins so AQE picks the strategy from actual sizes.
+    ``method="auto"`` (default) counts the query side and picks
+    "broadcast" at or under ``auto_threshold``
     (DEFAULT_QUERY_DRIVER_THRESHOLD), "cogroup" above -- the scale-safe
     path without the caller having to declare their scale.
 
@@ -931,9 +691,9 @@ def pq_search_rerank(
     - ``per_crowding_k`` / ``crowding_col`` apply the reference's
       crowding semantics (setup_vector_search.py:65-67) on the EXACT
       reranked scores via the same two-window ``_ranked`` the exact
-      path uses (knn.py:142), so cascade and brute-force crowding are
-      one code path. The crowding column lives on ``vectors_df`` and
-      rides the rerank hydration join. With crowding on, size
+      path uses (knn.py::_ranked), so cascade and brute-force crowding
+      are one code path. The crowding column lives on ``vectors_df``
+      and rides the rerank hydration join. With crowding on, size
       ``rerank_candidates`` generously (the ADC shortlist is not
       crowd-aware; a shortlist of c candidates can yield fewer than k
       post-cap survivors if one crowd dominates it).
@@ -944,8 +704,6 @@ def pq_search_rerank(
     products, and the final window is the exact path's window) -- the
     oracled sibling the driver gate checks.
     """
-    from .knn import _resolve_query_method
-
     method = _resolve_query_method(
         queries_df, method, small="broadcast", large="cogroup",
         threshold=auto_threshold,
@@ -958,33 +716,56 @@ def pq_search_rerank(
         )
     cand_k = rerank_candidates if rerank_candidates is not None else 4 * k
     if method == "cogroup":
-        cands = pq_topk_cogroup(
-            index, queries_df, cand_k,
+        cands = block_topk_cogroup(
+            index.codes, queries_df, cand_k, adc_scorer(index.books),
+            id_col=index.id_col,
             query_id_col=query_id_col, query_vec_col=query_vec_col,
-            probe_col=probe_col, n_clusters=n_clusters,
-        ).select("query_id", "neighbor_id")
+        )
     else:
         cands = pq_topk(
             index, queries_df, cand_k,
             query_id_col=query_id_col, query_vec_col=query_vec_col,
-            probe_col=probe_col, n_clusters=n_clusters, _rows=_rows,
-        ).select("query_id", "neighbor_id")
-
+        )
     q = queries_df.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("_qvec"),
     )
-    if method == "cogroup":
-        cands_side, q_side = cands, q
-    else:
-        cands_side, q_side = F.broadcast(cands), F.broadcast(q)
+    return _rerank(
+        cands, vectors_df, q, k, id_col=id_col, vec_col=vec_col,
+        broadcast=method != "cogroup",
+        per_crowding_k=per_crowding_k, crowding_col=crowding_col,
+    )
+
+
+def _rerank(
+    cands: DataFrame,
+    vectors_df: DataFrame,
+    q: DataFrame,
+    k: int,
+    *,
+    id_col: str,
+    vec_col: str,
+    broadcast: bool,
+    per_crowding_k: int | None,
+    crowding_col: str | None,
+) -> DataFrame:
+    """Exact rerank of an ADC shortlist: join (query_id, neighbor_id)
+    candidates onto the exact vectors and the (query_id, _qvec)
+    queries ``q``, re-score with the bit-exact fold dot product, and
+    apply the two-window ``_ranked``. ``broadcast`` hints both small
+    sides into the vector scan (request scale); otherwise the joins
+    stay shuffle joins so AQE plans them from actual sizes."""
+    cands = cands.select("query_id", "neighbor_id")
+    q = q.select("query_id", "_qvec")
+    if broadcast:
+        cands, q = F.broadcast(cands), F.broadcast(q)
     extra_cols = [crowding_col] if crowding_col else []
     exact = (
         vectors_df.select(
             F.col(id_col).alias("neighbor_id"), vec_col, *extra_cols
         )
-        .join(cands_side, "neighbor_id")
-        .join(q_side, "query_id")
+        .join(cands, "neighbor_id")
+        .join(q, "query_id")
         .select(
             "query_id",
             "neighbor_id",
@@ -992,6 +773,4 @@ def pq_search_rerank(
             *extra_cols,
         )
     )
-    return _ranked(exact, k, per_crowding_k, crowding_col).select(
-        "query_id", "rank", "neighbor_id", "score", *extra_cols
-    )
+    return _ranked(exact, k, per_crowding_k, crowding_col)

@@ -94,9 +94,16 @@ def _ranks(df):
 
 @pytest.mark.full
 def test_ivf_methods_agree(spark, sf_smoke):
-    """gemm / fold / gemm_join and the blocked wrapper produce identical
-    rankings at the same probe setting."""
-    from rag_vertex_ai_vector_search_spark.operators.ivf import ivf_search_blocked
+    """gemm / fold / gemm_join and the query-blocked cogroup kernel
+    produce identical rankings at the same probe setting."""
+    from rag_vertex_ai_vector_search_spark.operators.ivf import (
+        _probe_assign_udf,
+        _probe_on_executors,
+    )
+    from rag_vertex_ai_vector_search_spark.operators.knn import (
+        block_topk_cogroup,
+        dot_scorer,
+    )
 
     emb = load_table(spark, sf_smoke, "embeddings")
     queries = emb.filter(F.col("vec_id") < 12).select(
@@ -107,9 +114,15 @@ def test_ivf_methods_agree(spark, sf_smoke):
     base = _ranks(ivf_search(index, queries, method="gemm", **kw))
     assert _ranks(ivf_search(index, queries, method="fold", **kw)) == base
     assert _ranks(ivf_search(index, queries, method="gemm_join", **kw)) == base
-    assert _ranks(
-        ivf_search_blocked(index, queries, max_queries_per_block=5, **kw)
-    ) == base
+    pruned_q, probed = _probe_on_executors(
+        queries, "query_id", "query_vector",
+        _probe_assign_udf(index.centroids, 4),  # 25% of 16 clusters
+    )
+    assert _ranks(block_topk_cogroup(
+        index.assigned.filter(F.col("cluster_id").isin(probed)), pruned_q,
+        7, dot_scorer("embedding"), id_col="vec_id", query_vec_col="_qvec",
+        probe_col="_probe", n_clusters=16, n_query_blocks=3,
+    )) == base
 
 
 def test_ivf_gemm_join_never_collects_queries(spark, sf_smoke, monkeypatch):

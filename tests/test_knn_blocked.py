@@ -4,8 +4,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from rag_vertex_ai_vector_search_spark.operators.knn import (
+    block_topk_cogroup,
+    dot_scorer,
     knn_search,
-    knn_search_blocked,
 )
 from rag_vertex_ai_vector_search_spark.sources import load_table
 
@@ -21,8 +22,9 @@ def test_blocked_equals_fold(spark, sf_smoke):
         .select("query_id", "rank", "neighbor_id").collect()
     )
     blocked = sorted(
-        tuple(r) for r in knn_search_blocked(
-            emb, queries, k=7, max_queries_per_block=9
+        tuple(r) for r in block_topk_cogroup(
+            emb, queries, 7, dot_scorer("embedding"), id_col="vec_id",
+            n_query_blocks=5,
         ).select("query_id", "rank", "neighbor_id").collect()
     )
     assert blocked == fold
@@ -68,11 +70,6 @@ def test_gemm_join_crowding_equals_fold(spark, sf_smoke):
 def test_gemm_join_query_blocks_equal_fold(spark, sf_smoke):
     """Two-sided blocking (n_query_blocks > 1) partitions the pair space
     without loss or duplication."""
-    from rag_vertex_ai_vector_search_spark.operators.knn import (
-        _ranked,
-        gemm_topk_cogroup,
-    )
-
     emb = load_table(spark, sf_smoke, "embeddings")
     queries = emb.filter(F.col("vec_id") < 15).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vector")
@@ -81,9 +78,12 @@ def test_gemm_join_query_blocks_equal_fold(spark, sf_smoke):
         tuple(r) for r in knn_search(emb, queries, k=7, method="fold")
         .select("query_id", "rank", "neighbor_id").collect()
     )
-    scored = gemm_topk_cogroup(emb, queries, 7, n_query_blocks=3)
+    ranked = block_topk_cogroup(
+        emb, queries, 7, dot_scorer("embedding"), id_col="vec_id",
+        n_query_blocks=3,
+    )
     gj = sorted(
-        tuple(r) for r in _ranked(scored, 7, None, None)
+        tuple(r) for r in ranked
         .select("query_id", "rank", "neighbor_id").collect()
     )
     assert gj == fold

@@ -397,7 +397,10 @@ def test_pq_cogroup_query_blocks_equals_broadcast(spark, sf_smoke):
     replicates the code table across query blocks) must rank exactly
     like the broadcast path; its grouping keys are explicit bigints on
     both cogroup sides, not implicit coercions."""
-    from rag_vertex_ai_vector_search_spark.operators.pq import pq_topk_cogroup
+    from rag_vertex_ai_vector_search_spark.operators.knn import (
+        block_topk_cogroup,
+    )
+    from rag_vertex_ai_vector_search_spark.operators.pq import adc_scorer
 
     emb = load_table(spark, sf_smoke, "embeddings")
     queries = _queries(emb, n=12)
@@ -410,8 +413,9 @@ def test_pq_cogroup_query_blocks_equals_broadcast(spark, sf_smoke):
     for nqb in (2, 3):
         cg = sorted(
             tuple(r)
-            for r in pq_topk_cogroup(
-                index, queries, k=7, n_index_blocks=4, n_query_blocks=nqb
+            for r in block_topk_cogroup(
+                index.codes, queries, 7, adc_scorer(books), id_col="vec_id",
+                n_index_blocks=4, n_query_blocks=nqb,
             ).select("query_id", "rank", "neighbor_id").collect()
         )
         assert cg == bk, f"n_query_blocks={nqb}"
@@ -420,7 +424,7 @@ def test_pq_cogroup_query_blocks_equals_broadcast(spark, sf_smoke):
 def test_knn_cogroup_query_blocks_equals_fold(spark, sf_smoke):
     """Same n_query_blocks>1 guarantee for the GEMM cogroup scorer."""
     from rag_vertex_ai_vector_search_spark.operators.knn import (
-        _ranked, gemm_topk_cogroup,
+        block_topk_cogroup, dot_scorer,
     )
 
     emb = load_table(spark, sf_smoke, "embeddings")
@@ -429,14 +433,73 @@ def test_knn_cogroup_query_blocks_equals_fold(spark, sf_smoke):
         tuple(r) for r in knn_search(emb, queries, k=7, method="fold")
         .select("query_id", "rank", "neighbor_id").collect()
     )
-    scored = gemm_topk_cogroup(
-        emb, queries, k=7, n_index_blocks=4, n_query_blocks=2
+    ranked = block_topk_cogroup(
+        emb, queries, 7, dot_scorer("embedding"), id_col="vec_id",
+        n_index_blocks=4, n_query_blocks=2,
     )
     cg = sorted(
-        tuple(r) for r in _ranked(scored, 7, None, None)
+        tuple(r) for r in ranked
         .select("query_id", "rank", "neighbor_id").collect()
     )
     assert cg == fold
+
+
+def test_adc_topk_keeps_tied_codes_in_id_order(spark):
+    """Duplicate documents share PQ codes, so their ADC scores tie
+    exactly. Both strategies must return the (score desc, id asc)
+    winners -- the global window's tie-break -- not an arbitrary subset
+    of the rows tied at the k-th score."""
+    import pandas as pd
+
+    from rag_vertex_ai_vector_search_spark.operators.knn import (
+        block_topk_cogroup,
+    )
+    from rag_vertex_ai_vector_search_spark.operators.pq import (
+        PQIndex,
+        _lut_for,
+        adc_scorer,
+        codebooks_from_vectors,
+    )
+
+    rng = np.random.default_rng(11)
+    dim, m, ksub, n, nq, k = 8, 2, 4, 60, 6, 5
+    books = codebooks_from_vectors(rng.normal(size=(ksub, dim)), m=m)
+    codes = rng.integers(0, ksub, size=(n, m)).astype(np.uint8)
+    ids = rng.permutation(10 * n)[:n].astype(np.int64)
+    # one block per strategy: every tied row meets in one local top-k
+    index = PQIndex(
+        codes=spark.createDataFrame(
+            pd.DataFrame({
+                "vec_id": ids, "pq_code": [c.tobytes() for c in codes],
+            }),
+            "vec_id bigint, pq_code binary",
+        ).coalesce(1),
+        books=books,
+        id_col="vec_id",
+    )
+    qmat = rng.normal(size=(nq, dim))
+    queries = spark.createDataFrame(
+        pd.DataFrame({"query_id": range(nq), "query_vector": qmat.tolist()}),
+        "query_id bigint, query_vector array<double>",
+    )
+    lut = _lut_for(qmat, books.codebooks)
+    adc = lut[:, 0, codes[:, 0]] + lut[:, 1, codes[:, 1]]  # (nq, n)
+    want = {
+        q: [int(i) for i in ids[np.lexsort((ids, -adc[q]))[:k]]]
+        for q in range(nq)
+    }
+
+    def got(ranked):
+        out = {}
+        for r in ranked.orderBy("query_id", "rank").collect():
+            out.setdefault(r.query_id, []).append(r.neighbor_id)
+        return out
+
+    assert got(pq_topk(index, queries, k)) == want
+    assert got(block_topk_cogroup(
+        index.codes, queries, k, adc_scorer(books), id_col="vec_id",
+        n_index_blocks=1,
+    )) == want
 
 
 def test_pq_cogroup_never_collects_to_driver(spark, sf_smoke, monkeypatch):
