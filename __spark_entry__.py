@@ -3433,9 +3433,12 @@ def q_streaming_vocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from rag_vertex_ai_vector_search_spark.streaming.state import (
+        read_state,
+        stream_state,
+    )
     from rag_vertex_ai_vector_search_spark.streaming.vocab import (
-        read_vocab,
-        stream_vocab_counts,
+        vocab_state,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3456,8 +3459,9 @@ def q_streaming_vocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 3 != 2).repartition(2).write.parquet(
             src
         )
-        q = stream_vocab_counts(
-            _restartable_stream(), table, checkpoint_dir=ckpt
+        q = stream_state(
+            _restartable_stream(), {table: vocab_state()},
+            checkpoint_dir=ckpt,
         )
         try:
             q.processAllAvailable()
@@ -3468,8 +3472,9 @@ def q_streaming_vocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        q = stream_vocab_counts(
-            _restartable_stream(), table, checkpoint_dir=ckpt
+        q = stream_state(
+            _restartable_stream(), {table: vocab_state()},
+            checkpoint_dir=ckpt,
         )
         try:
             q.processAllAvailable()
@@ -3483,7 +3488,9 @@ def q_streaming_vocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"stream produced {n_epochs} micro-batch(es); the gate "
                 "requires exactly 3 (two pre-restart, one post-restart)"
             )
-        return read_vocab(spark, table).localCheckpoint(eager=True)
+        return read_state(spark, table, vocab_state()).localCheckpoint(
+            eager=True
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -3597,16 +3604,15 @@ def q_streaming_sketches_maintained(
 ) -> DataFrame:
     """The streaming subsystem's THIRD driver gate: the whole
     mergeable-sketch family (streaming/sketch_stream.py) maintained by
-    REAL Structured Streaming runs -- one micro-batched file source
-    (documents split into 3 files, one per trigger), four maintenance
-    streams attached in turn (HLL registers p=8 per lang, CMS counters
-    4x64, Bloom words m=2^16/k=3, word-length histogram 32 bins over
-    [0,64) -- max-, sum- and bit_or-merge, every fold algebra of the
-    family), each building its
-    epoch-partitioned state table from >= 2 asserted micro-batches,
-    then COMPACTED (fold-to-base static overwrite, the with-stream-
-    paused maintenance action) before the fold that the driver
-    hash-checks. Because all three merges are integer-exact and
+    ONE REAL Structured Streaming query -- one micro-batched file
+    source (documents split into 3 files, one per trigger) feeding
+    four sinks (HLL registers p=8 per lang, CMS counters 4x64, Bloom
+    words m=2^16/k=3, word-length histogram 32 bins over [0,64) --
+    max-, sum- and bit_or-merge, every fold algebra of the family),
+    each building its epoch-partitioned state table from >= 2 asserted
+    micro-batches, then COMPACTED (fold-to-base static overwrite, the
+    with-stream-paused maintenance action) before the fold that the
+    driver hash-checks. Because all three merges are integer-exact and
     order-independent (module docstring: stream==batch by
     construction), the maintained-and-compacted tables must equal the
     batch sketches of the full corpus -- the oracle is the batch
@@ -3630,18 +3636,15 @@ def q_streaming_sketches_maintained(
         hll_estimate,
     )
     from rag_vertex_ai_vector_search_spark.streaming.sketch_stream import (
-        compact_bloom,
-        compact_cms,
-        compact_histogram,
-        compact_hll,
-        read_bloom,
-        read_cms,
-        read_histogram,
-        read_hll,
-        stream_bloom,
-        stream_cms,
-        stream_histogram,
-        stream_hll,
+        bloom_state,
+        cms_state,
+        histogram_state,
+        hll_state,
+    )
+    from rag_vertex_ai_vector_search_spark.streaming.state import (
+        compact_state,
+        read_state,
+        stream_state,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
@@ -3660,62 +3663,29 @@ def q_streaming_sketches_maintained(
                 ).alias("word"),
             )
         )
-        runs = (
-            (
-                "hll",
-                lambda t, c: stream_hll(
-                    words_stream, t, checkpoint_dir=c, col="word",
-                    group_cols=("lang",), p=8,
-                ),
-                compact_hll,
-                {"group_cols": ("lang",)},
+        hist = histogram_state(col="wlen", lo=0, hi=64, n_bins=32)
+        specs = {
+            "hll": hll_state(col="word", group_cols=("lang",), p=8),
+            "cms": cms_state(col="word", depth=4, width=64),
+            "bloom": bloom_state(col="word", n_bits=1 << 16, k=3),
+            "hist": hist._replace(
+                partial=lambda df: hist.partial(
+                    df.select(F.length("word").alias("wlen"))
+                )
             ),
-            (
-                "cms",
-                lambda t, c: stream_cms(
-                    words_stream, t, checkpoint_dir=c, col="word",
-                    depth=4, width=64,
-                ),
-                compact_cms,
-                {},
-            ),
-            (
-                "bloom",
-                lambda t, c: stream_bloom(
-                    words_stream, t, checkpoint_dir=c, col="word",
-                    n_bits=1 << 16, k=3,
-                ),
-                compact_bloom,
-                {},
-            ),
-            (
-                "hist",
-                lambda t, c: stream_histogram(
-                    words_stream.select(
-                        F.length("word").alias("wlen")
-                    ),
-                    t, checkpoint_dir=c, col="wlen",
-                    lo=0, hi=64, n_bins=32,
-                ),
-                compact_histogram,
-                {},
-            ),
+        }
+        # One source, one query, four sinks: each micro-batch is read
+        # once and feeds every table.
+        q = stream_state(
+            words_stream,
+            {f"{work}/{name}": spec for name, spec in specs.items()},
+            checkpoint_dir=f"{work}/ckpt",
         )
-        # One source, four maintenance sinks, started CONCURRENTLY --
-        # the production shape (and it keeps this gate's wall time at
-        # ~one stream instead of four).
-        started = [
-            (name, start(f"{work}/{name}", f"{work}/ckpt_{name}"),
-             compact, kw)
-            for name, start, compact, kw in runs
-        ]
         try:
-            for _, q, _, _ in started:
-                q.processAllAvailable()
+            q.processAllAvailable()
         finally:
-            for _, q, _, _ in started:
-                q.stop()
-        for name, _, compact, kw in started:
+            q.stop()
+        for name, spec in specs.items():
             table = f"{work}/{name}"
             n_epochs = (
                 spark.read.parquet(table)
@@ -3727,7 +3697,7 @@ def q_streaming_sketches_maintained(
                     "the gate requires the maintained table to be built "
                     "from >= 2"
                 )
-            compact(spark, table, **kw)
+            compact_state(spark, table, spec)
             post = [
                 r[0]
                 for r in spark.read.parquet(table)
@@ -3738,7 +3708,7 @@ def q_streaming_sketches_maintained(
                     f"{name} compaction left epochs {post}; expected "
                     "exactly the _epoch=-1 base partition"
                 )
-        hll_regs = read_hll(spark, f"{work}/hll", group_cols=("lang",))
+        hll_regs = read_state(spark, f"{work}/hll", specs["hll"])
         est = hll_estimate(hll_regs, group_cols=("lang",), p=8)
         out = (
             hll_regs.select(
@@ -3756,7 +3726,7 @@ def q_streaming_sketches_maintained(
                 )
             )
             .unionByName(
-                read_cms(spark, f"{work}/cms").select(
+                read_state(spark, f"{work}/cms", specs["cms"]).select(
                     F.lit("cms").alias("sketch"),
                     F.col("row").cast("string").alias("k1"),
                     F.col("bucket").cast("long").alias("k2"),
@@ -3764,7 +3734,7 @@ def q_streaming_sketches_maintained(
                 )
             )
             .unionByName(
-                read_bloom(spark, f"{work}/bloom").select(
+                read_state(spark, f"{work}/bloom", specs["bloom"]).select(
                     F.lit("bloom").alias("sketch"),
                     F.lit("").alias("k1"),
                     F.col("word").cast("long").alias("k2"),
@@ -3772,7 +3742,7 @@ def q_streaming_sketches_maintained(
                 )
             )
             .unionByName(
-                read_histogram(spark, f"{work}/hist").select(
+                read_state(spark, f"{work}/hist", specs["hist"]).select(
                     F.lit("hist").alias("sketch"),
                     F.lit("").alias("k1"),
                     F.col("bin").cast("long").alias("k2"),
@@ -3868,10 +3838,10 @@ def q_streaming_lm_models_maintained(
     incrementally-maintained MODEL tables that the text-quality
     operators consume -- trigram position counts (streaming/ngram.py),
     line document frequencies (streaming/linestats.py) and the DSIR
-    hashed-gram raw model (streaming/dsir_stream.py) -- each built by
-    a REAL micro-batched Structured Streaming run (documents split
-    into 3 files, one per trigger, >= 2 asserted epochs), then fed
-    into its REAL batch scorer: trigram_surprisal(counts=...),
+    hashed-gram raw model (streaming/dsir_stream.py) -- all three
+    built by ONE REAL micro-batched Structured Streaming query
+    (documents split into 3 files, one per trigger, >= 2 asserted
+    epochs), then each fed into its REAL batch scorer: trigram_surprisal(counts=...),
     dedup_boilerplate_lines(line_counts=...),
     dsir_log_importance(raw_counts=...).
 
@@ -3898,16 +3868,17 @@ def q_streaming_lm_models_maintained(
         trigram_surprisal,
     )
     from rag_vertex_ai_vector_search_spark.streaming.dsir_stream import (
-        read_dsir_model,
-        stream_dsir_model,
+        dsir_state,
     )
     from rag_vertex_ai_vector_search_spark.streaming.linestats import (
-        read_line_df,
-        stream_line_df,
+        line_df_state,
     )
     from rag_vertex_ai_vector_search_spark.streaming.ngram import (
-        read_ngram_counts,
-        stream_ngram_counts,
+        ngram_state,
+    )
+    from rag_vertex_ai_vector_search_spark.streaming.state import (
+        read_state,
+        stream_state,
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -3949,39 +3920,26 @@ def q_streaming_lm_models_maintained(
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        runs = (
-            (
-                "ngram",
-                lambda t, c: stream_ngram_counts(
-                    stream, t, checkpoint_dir=c
-                ),
+        linedf = line_df_state()
+        specs = {
+            "ngram": ngram_state(),
+            "linedf": linedf._replace(
+                partial=lambda df: linedf.partial(lined_of(df))
             ),
-            (
-                "linedf",
-                lambda t, c: stream_line_df(
-                    lined_of(stream), t, checkpoint_dir=c
-                ),
-            ),
-            (
-                "dsir",
-                lambda t, c: stream_dsir_model(
-                    stream, t, checkpoint_dir=c, n_buckets=1024
-                ),
-            ),
+            "dsir": dsir_state(n_buckets=1024),
+        }
+        # One source, one query, three sinks: each micro-batch is read
+        # once and feeds every model table.
+        q = stream_state(
+            stream,
+            {f"{work}/{name}": spec for name, spec in specs.items()},
+            checkpoint_dir=f"{work}/ckpt",
         )
-        # One source, three maintenance sinks, started CONCURRENTLY
-        # (the production shape; also ~one stream of wall time).
-        started = [
-            (name, start(f"{work}/{name}", f"{work}/ckpt_{name}"))
-            for name, start in runs
-        ]
         try:
-            for _, q in started:
-                q.processAllAvailable()
+            q.processAllAvailable()
         finally:
-            for _, q in started:
-                q.stop()
-        for name, _ in started:
+            q.stop()
+        for name in specs:
             n_epochs = (
                 spark.read.parquet(f"{work}/{name}")
                 .select("_epoch").distinct().count()
@@ -3993,19 +3951,20 @@ def q_streaming_lm_models_maintained(
                     "from >= 2"
                 )
         tri = trigram_surprisal(
-            docs, alpha=0.5, counts=read_ngram_counts(spark, f"{work}/ngram")
+            docs, alpha=0.5,
+            counts=read_state(spark, f"{work}/ngram", specs["ngram"]),
         )
         boiler = dedup_boilerplate_lines(
             lined_of(docs),
             max_line_df=1,
-            line_counts=read_line_df(spark, f"{work}/linedf"),
+            line_counts=read_state(spark, f"{work}/linedf", specs["linedf"]),
         )
         dsir = dsir_log_importance(
             docs,
             docs.filter(F.col("lang") == "en"),
             n_buckets=1024,
             alpha=0.5,
-            raw_counts=read_dsir_model(spark, f"{work}/dsir"),
+            raw_counts=read_state(spark, f"{work}/dsir", specs["dsir"]),
         )
         out = (
             tri.select(
@@ -4082,9 +4041,12 @@ def q_streaming_rollup_maintained(
     import tempfile
 
     from rag_vertex_ai_vector_search_spark.streaming.rollup import (
-        compact_rollup,
         read_rollup,
-        stream_rollup_events,
+        rollup_state,
+    )
+    from rag_vertex_ai_vector_search_spark.streaming.state import (
+        compact_state,
+        stream_state,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -4100,8 +4062,8 @@ def q_streaming_rollup_maintained(
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = stream_rollup_events(
-            stream, table, checkpoint_dir=f"{work}/ckpt"
+        q = stream_state(
+            stream, {table: rollup_state()}, checkpoint_dir=f"{work}/ckpt"
         )
         try:
             q.processAllAvailable()
@@ -4115,7 +4077,7 @@ def q_streaming_rollup_maintained(
                 f"rollup stream produced {n_epochs} micro-batch(es); the "
                 "gate requires the maintained table to be built from >= 2"
             )
-        compact_rollup(spark, table)
+        compact_state(spark, table, rollup_state())
         post = [
             r[0]
             for r in spark.read.parquet(table)
@@ -6474,10 +6436,13 @@ def q_streaming_doremi_maintained(
         dsir_gumbel_select,
     )
     from rag_vertex_ai_vector_search_spark.streaming.doremi_stream import (
-        compact_doremi,
+        doremi_state,
         doremi_weights_from_stream,
-        read_doremi_base,
-        stream_doremi_counts,
+    )
+    from rag_vertex_ai_vector_search_spark.streaming.state import (
+        compact_state,
+        read_state,
+        stream_state,
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -6499,8 +6464,9 @@ def q_streaming_doremi_maintained(
         docs.filter(F.col("doc_id") % 3 != 2).repartition(2).write.parquet(
             src
         )
-        q = stream_doremi_counts(
-            _restartable_stream(), table, checkpoint_dir=ckpt
+        q = stream_state(
+            _restartable_stream(), {table: doremi_state()},
+            checkpoint_dir=ckpt,
         )
         try:
             q.processAllAvailable()
@@ -6509,8 +6475,9 @@ def q_streaming_doremi_maintained(
         docs.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        q = stream_doremi_counts(
-            _restartable_stream(), table, checkpoint_dir=ckpt
+        q = stream_state(
+            _restartable_stream(), {table: doremi_state()},
+            checkpoint_dir=ckpt,
         )
         try:
             q.processAllAvailable()
@@ -6525,12 +6492,14 @@ def q_streaming_doremi_maintained(
                 "requires exactly 3 (two pre-restart, one post-restart)"
             )
         pre = sorted(
-            tuple(r) for r in read_doremi_base(spark, table).collect()
+            tuple(r)
+            for r in read_state(spark, table, doremi_state()).collect()
         )
-        compact_doremi(spark, table)
+        compact_state(spark, table, doremi_state())
         spark.catalog.refreshByPath(table)
         post = sorted(
-            tuple(r) for r in read_doremi_base(spark, table).collect()
+            tuple(r)
+            for r in read_state(spark, table, doremi_state()).collect()
         )
         if pre != post:
             raise RuntimeError(

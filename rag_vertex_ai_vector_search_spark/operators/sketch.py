@@ -43,6 +43,8 @@ order-independent and bit-reproducible in SQL.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -113,15 +115,29 @@ def hll_sketch(
     )
 
 
+_FOLDS = {"sum": F.sum, "max": F.max, "bit_or": F.bit_or}
+
+
+def keyed_fold(df: DataFrame, folds: dict[str, str]) -> DataFrame:
+    """Fold rows that share a key: ``folds`` maps each value column to
+    ``"sum"``, ``"max"`` or ``"bit_or"``, every other column except
+    ``_epoch`` is the key, and each folded column is cast back to its
+    stored type. The one merge rule of the sketch tables here and of
+    the maintained state tables (streaming/state.py)."""
+    types = dict(df.dtypes)
+    keys = [c for c in df.columns if c not in folds and c != "_epoch"]
+    return df.groupBy(*keys).agg(*[
+        _FOLDS[how](c).cast(types[c]).alias(c) for c, how in folds.items()
+    ])
+
+
 def hll_merge(*sketches: DataFrame) -> DataFrame:
     """Union register tables from shards/days/micro-batches into one:
     register-wise MAX. The whole point of the sketch -- merging never
     re-reads the data that produced it."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c != "max_rho"]
-    return out.groupBy(*keys).agg(F.max("max_rho").alias("max_rho"))
+    return keyed_fold(
+        reduce(DataFrame.unionByName, sketches), {"max_rho": "max"}
+    )
 
 
 def hll_estimate(
@@ -226,11 +242,9 @@ def cms_sketch(
 def cms_merge(*sketches: DataFrame) -> DataFrame:
     """Counter-wise ADDITION of counter tables -- sketches of disjoint
     shards sum to the sketch of the union (exactly, by linearity)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c != "cnt"]
-    return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
+    return keyed_fold(
+        reduce(DataFrame.unionByName, sketches), {"cnt": "sum"}
+    )
 
 
 def cms_point_estimate(
@@ -362,12 +376,8 @@ def bloom_sketch(
 def bloom_merge(*sketches: DataFrame) -> DataFrame:
     """Word-wise bit OR of word tables: sketches of shards merge to
     exactly the sketch of the union (set union of the bit sets)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c != "bits"]
-    return out.groupBy(*keys).agg(
-        F.expr("bit_or(bits)").cast("long").alias("bits")
+    return keyed_fold(
+        reduce(DataFrame.unionByName, sketches), {"bits": "bit_or"}
     )
 
 
@@ -490,11 +500,9 @@ def histogram_sketch(
 
 def histogram_merge(*sketches: DataFrame) -> DataFrame:
     """Bin-wise ADDITION: shard histograms sum exactly to the union's."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c != "cnt"]
-    return out.groupBy(*keys).agg(F.sum("cnt").cast("long").alias("cnt"))
+    return keyed_fold(
+        reduce(DataFrame.unionByName, sketches), {"cnt": "sum"}
+    )
 
 
 def histogram_quantiles(

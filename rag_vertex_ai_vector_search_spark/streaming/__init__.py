@@ -1,42 +1,19 @@
 from .ingest import stream_merge_into_index
 from .dedup import stream_dedup_exact
-from .rollup import (
-    apply_rollup_batch,
-    compact_rollup,
-    read_rollup,
-    stream_rollup_events,
+from .state import (
+    StateSpec,
+    apply_state_batch,
+    compact_state,
+    read_state,
+    stream_state,
 )
-from .vocab import (
-    apply_vocab_batch,
-    compact_vocab,
-    read_vocab,
-    stream_vocab_counts,
-)
-from .doremi_stream import (
-    compact_doremi,
-    doremi_weights_from_stream,
-    read_doremi_base,
-    stream_doremi_counts,
-)
-from .ngram import (
-    apply_ngram_batch,
-    compact_ngrams,
-    read_ngram_counts,
-    stream_ngram_counts,
-)
-from .linestats import (
-    apply_line_df_batch,
-    compact_line_df,
-    read_line_df,
-    stream_line_df,
-)
+from .rollup import read_rollup, rollup_state
+from .vocab import vocab_state
+from .doremi_stream import doremi_state, doremi_weights_from_stream
+from .ngram import ngram_state
+from .linestats import line_df_state
 from .join import stream_interval_join
-from .dsir_stream import (
-    apply_dsir_batch,
-    compact_dsir_model,
-    read_dsir_model,
-    stream_dsir_model,
-)
+from .dsir_stream import dsir_state
 from .dedup_minhash import (
     apply_minhash_dedup_batch,
     read_deduped,
@@ -47,31 +24,20 @@ from .maintenance import maintain_index
 __all__ = [
     "stream_merge_into_index",
     "stream_dedup_exact",
-    "stream_rollup_events",
-    "apply_rollup_batch",
+    "StateSpec",
+    "apply_state_batch",
+    "compact_state",
+    "read_state",
+    "stream_state",
     "read_rollup",
-    "compact_rollup",
-    "apply_vocab_batch",
-    "compact_doremi",
-    "compact_vocab",
+    "rollup_state",
+    "vocab_state",
+    "doremi_state",
     "doremi_weights_from_stream",
-    "read_doremi_base",
-    "read_vocab",
-    "stream_doremi_counts",
-    "stream_vocab_counts",
-    "apply_ngram_batch",
-    "compact_ngrams",
-    "read_ngram_counts",
-    "stream_ngram_counts",
-    "apply_line_df_batch",
-    "compact_line_df",
-    "read_line_df",
-    "stream_line_df",
+    "ngram_state",
+    "line_df_state",
+    "dsir_state",
     "stream_interval_join",
-    "apply_dsir_batch",
-    "compact_dsir_model",
-    "read_dsir_model",
-    "stream_dsir_model",
     "apply_minhash_dedup_batch",
     "read_deduped",
     "stream_dedup_minhash",

@@ -11,86 +11,22 @@ contexts), corpus totals -- so maintaining the highest order maintains
 them all, and the derived tables are bit-equal to batch recomputation
 by construction (pure bigint arithmetic, no floats anywhere).
 
-Same exactly-once-by-layout design as streaming/vocab.py and
-rollup.py: each micro-batch's partial lands under ``_epoch=<id>`` with
-WRITER-scoped dynamic partition overwrite, so at-least-once
-foreachBatch replay overwrites its own partition wholesale and table
-contents stay exactly-once. ``compact_ngrams`` folds epochs into a
-base partition to bound read amplification.
-
-At 100 TB the per-batch partial is bounded by the batch's distinct
-trigrams (map-side combine does the reduction), and the read-time fold
-is one sum per trigram -- the same additive-counts economics the vocab
-stream proved, one order higher.
+Position counts are additive (each document arrives in exactly one
+micro-batch), so the fold is one sum per trigram. The per-batch
+partial is bounded by the batch's distinct trigrams. Writing,
+streaming, reading and compacting go through streaming/state.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from ..operators.lm_quality import trigram_position_counts
+from .state import StateSpec
 
 
-def ngram_partial(
-    batch_df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """One micro-batch -> (prev2, prev, word, n) partial counts."""
-    from ..operators.lm_quality import trigram_position_counts
-
-    return trigram_position_counts(
-        batch_df, id_col=id_col, text_col=text_col
+def ngram_state(**kw) -> StateSpec:
+    """The (prev2, prev, word, n) table -- read, it is the ``counts=``
+    input of trigram_surprisal; ``kw`` are the options of
+    ``trigram_position_counts`` (``id_col``, ``text_col``)."""
+    return StateSpec(
+        lambda df: trigram_position_counts(df, **kw), {"n": "sum"}
     )
-
-
-def apply_ngram_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
-    *, id_col: str = "doc_id", text_col: str = "text",
-) -> None:
-    """foreachBatch body: partial counts under the epoch partition
-    (writer-scoped dynamic overwrite -> replay-idempotent)."""
-    (
-        ngram_partial(batch_df, id_col=id_col, text_col=text_col)
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
-    )
-
-
-def stream_ngram_counts(
-    stream_df: DataFrame, table_path: str, *,
-    checkpoint_dir: str, id_col: str = "doc_id", text_col: str = "text",
-):
-    """Attach the n-gram maintenance to a document stream."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_ngram_batch(
-                df, eid, table_path, id_col=id_col, text_col=text_col
-            )
-        )
-        .start()
-    )
-
-
-def read_ngram_counts(spark: SparkSession, table_path: str) -> DataFrame:
-    """Fold all epoch partials to the current (prev2, prev, word, n)
-    table -- the `counts=` input of trigram_surprisal."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy("prev2", "prev", "word")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
-def compact_ngrams(spark: SparkSession, table_path: str) -> None:
-    """Fold accumulated epochs into one base partition (``_epoch=-1``),
-    bounding read amplification; run with the stream paused (the same
-    Delta/Iceberg seam as the rollup/vocab compactors)."""
-    folded = (
-        read_ngram_counts(spark, table_path)
-        .withColumn("_epoch", F.lit(-1))
-        .localCheckpoint(eager=True)  # cut lineage off the replaced files
-    )
-    folded.write.mode("overwrite").partitionBy("_epoch").parquet(table_path)

@@ -12,21 +12,13 @@ the same result INCREMENTALLY with O(batch) work per micro-batch:
   ``countDistinct(user_id)`` stays derivable (the classic two-level
   exact-distinct design; swap the user grain for an HLL sketch column
   when approximate distinct is acceptable at extreme cardinality).
-- Partials land in the rollup table under ``_epoch=<epoch_id>`` with
-  DYNAMIC partition overwrite. Replays of a failed epoch overwrite
-  their own partition wholesale, so at-least-once foreachBatch delivery
-  still yields EXACTLY-ONCE table contents -- idempotence by layout,
-  no transaction log needed.
+  Counts and DECIMAL sums are associative, so the partial table folds
+  by sum per grain key (``rollup_state``; writing, streaming and
+  compacting go through streaming/state.py).
 - ``read_rollup`` folds all epochs to the final (hour, event_type)
   view: sums of partials for the additive measures, count-distinct over
   the user grain for n_users. Bit-equal to the batch query by
-  construction (DECIMAL sums are associative; see
-  tests/test_streaming_rollup.py).
-- ``compact_rollup`` folds accumulated epoch partitions into one base
-  partition (``_epoch=-1``), bounding read amplification; run it on the
-  maintenance cadence, with the stream paused (a table format with
-  transactions -- Delta/Iceberg -- lifts that restriction; the seam is
-  the same DataFrames).
+  construction (see tests/test_streaming_rollup.py).
 """
 
 from __future__ import annotations
@@ -34,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .state import StateSpec
+
 _DEC = "decimal(18,2)"
-_GRAIN = ("hour", "event_type", "user_id")
 
 
 def _partial(batch_df: DataFrame) -> DataFrame:
@@ -51,47 +44,9 @@ def _partial(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def stream_rollup_events(
-    stream_df: DataFrame,
-    rollup_path: str,
-    *,
-    checkpoint_dir: str,
-    trigger_seconds: int | None = None,
-):
-    """Start the streaming query maintaining the rollup at rollup_path."""
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            _partial(batch_df)
-            .withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(rollup_path)
-        )
-
-    writer = stream_df.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def apply_rollup_batch(batch_df: DataFrame, epoch_id: int, rollup_path: str) -> None:
-    """The foreachBatch body, callable directly (tests / backfills)."""
-    if batch_df.isEmpty():
-        return
-    (
-        _partial(batch_df)
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(rollup_path)
-    )
+def rollup_state() -> StateSpec:
+    """The (hour, event_type, user_id) partial-aggregate table."""
+    return StateSpec(_partial, {"n_events": "sum", "sum_value": "sum"})
 
 
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
@@ -109,23 +64,3 @@ def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
             F.countDistinct("user_id").alias("n_users"),
         )
     )
-
-
-def compact_rollup(spark: SparkSession, rollup_path: str) -> None:
-    """Fold all epoch partitions into the ``_epoch=-1`` base partition.
-
-    Bounds read amplification to O(base + epochs-since-compaction).
-    Re-aggregates at the partial grain (still additive), materializes
-    to cut lineage off the files being replaced, then rewrites the
-    whole table as one partition."""
-    partials = spark.read.parquet(rollup_path)
-    folded = (
-        partials.groupBy(*_GRAIN)
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum(F.col("sum_value").cast(_DEC)).alias("sum_value"),
-        )
-        .withColumn("_epoch", F.lit(-1))
-        .localCheckpoint(eager=True)
-    )
-    folded.write.mode("overwrite").partitionBy("_epoch").parquet(rollup_path)

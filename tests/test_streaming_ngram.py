@@ -11,11 +11,12 @@ from rag_vertex_ai_vector_search_spark.operators.lm_quality import (
     trigram_surprisal,
 )
 from rag_vertex_ai_vector_search_spark.sources import load_table
-from rag_vertex_ai_vector_search_spark.streaming.ngram import (
-    apply_ngram_batch,
-    compact_ngrams,
-    read_ngram_counts,
-    stream_ngram_counts,
+from rag_vertex_ai_vector_search_spark.streaming.ngram import ngram_state
+from rag_vertex_ai_vector_search_spark.streaming.state import (
+    apply_state_batch,
+    compact_state,
+    read_state,
+    stream_state,
 )
 
 import pytest
@@ -46,7 +47,7 @@ def test_stream_ngrams_match_batch(spark, sf_smoke, tmp_path):
     stream = spark.readStream.schema(docs.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = stream_ngram_counts(stream, table, checkpoint_dir=ckpt)
+    q = stream_state(stream, {table: ngram_state()}, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -54,7 +55,7 @@ def test_stream_ngrams_match_batch(spark, sf_smoke, tmp_path):
 
     epochs = spark.read.parquet(table).select("_epoch").distinct().count()
     assert epochs >= 2, "stream must have produced multiple micro-batches"
-    _assert_same(read_ngram_counts(spark, table), _batch_counts(docs))
+    _assert_same(read_state(spark, table, ngram_state()), _batch_counts(docs))
 
 
 def test_ngram_replay_idempotent_and_scorer_parity(spark, sf_smoke, tmp_path):
@@ -65,10 +66,12 @@ def test_ngram_replay_idempotent_and_scorer_parity(spark, sf_smoke, tmp_path):
     table = str(tmp_path / "ngrams")
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
-    apply_ngram_batch(first, 0, table)
-    apply_ngram_batch(second, 1, table)
-    apply_ngram_batch(second, 1, table)  # at-least-once replay
-    counts = read_ngram_counts(spark, table)
+    apply_state_batch(first, 0, {table: ngram_state()})
+    apply_state_batch(second, 1, {table: ngram_state()})
+    apply_state_batch(
+        second, 1, {table: ngram_state()}
+    )  # at-least-once replay
+    counts = read_state(spark, table, ngram_state())
     _assert_same(counts, _batch_counts(docs))
 
     scored_stream = trigram_surprisal(docs, counts=counts)
@@ -100,14 +103,19 @@ def test_ngram_compaction_folds_epochs(spark, sf_smoke, tmp_path):
     docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     table = str(tmp_path / "ngrams")
     for i in range(4):
-        apply_ngram_batch(docs.filter(F.col("doc_id") % 4 == i), i, table)
-    expected = sorted(map(tuple, read_ngram_counts(spark, table).collect()))
+        apply_state_batch(
+            docs.filter(F.col("doc_id") % 4 == i), i, {table: ngram_state()}
+        )
+    expected = sorted(
+        map(tuple, read_state(spark, table, ngram_state()).collect())
+    )
 
-    compact_ngrams(spark, table)
+    compact_state(spark, table, ngram_state())
     files_after = glob.glob(f"{table}/_epoch=*")
     assert [f.rsplit("=", 1)[-1] for f in files_after] == ["-1"]
-    assert sorted(map(tuple, read_ngram_counts(spark, table).collect())) \
-        == expected
+    assert sorted(
+        map(tuple, read_state(spark, table, ngram_state()).collect())
+    ) == expected
 
 
 # -- line document-frequency maintenance (streaming/linestats.py) ----------
@@ -122,8 +130,7 @@ def test_stream_line_df_matches_batch_and_cleaner_parity(
         dedup_boilerplate_lines,
     )
     from rag_vertex_ai_vector_search_spark.streaming.linestats import (
-        apply_line_df_batch,
-        read_line_df,
+        line_df_state,
     )
 
     footer = "shared footer line"
@@ -133,11 +140,17 @@ def test_stream_line_df_matches_batch_and_cleaner_parity(
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     table = str(tmp_path / "linedf")
-    apply_line_df_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, table)
-    apply_line_df_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
-    apply_line_df_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
+    apply_state_batch(
+        docs.filter(F.col("doc_id") % 2 == 0), 0, {table: line_df_state()}
+    )
+    apply_state_batch(
+        docs.filter(F.col("doc_id") % 2 == 1), 1, {table: line_df_state()}
+    )
+    apply_state_batch(
+        docs.filter(F.col("doc_id") % 2 == 1), 1, {table: line_df_state()}
+    )
 
-    counts = read_line_df(spark, table)
+    counts = read_state(spark, table, line_df_state())
     batch = (
         docs.select(
             "doc_id", F.explode(F.split("text", "\n")).alias("line")

@@ -26,14 +26,16 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from rag_vertex_ai_vector_search_spark.streaming import state as state_mod
 from rag_vertex_ai_vector_search_spark.streaming import vocab as vocab_mod
 from rag_vertex_ai_vector_search_spark.streaming.dedup import (
     stream_dedup_exact,
 )
-from rag_vertex_ai_vector_search_spark.streaming.vocab import (
-    read_vocab,
-    stream_vocab_counts,
+from rag_vertex_ai_vector_search_spark.streaming.state import (
+    read_state,
+    stream_state,
 )
+from rag_vertex_ai_vector_search_spark.streaming.vocab import vocab_state
 
 # Slow tier: real micro-batched lifecycles with restarts.
 pytestmark = pytest.mark.full
@@ -68,7 +70,7 @@ def _vocab_uninterrupted(spark, tmp_path, tag):
     ckpt = str(tmp_path / f"ckpt_{tag}")
     _write_batch(spark, _VOCAB_BATCHES[0], DOC_SCHEMA, src)
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
-    q = stream_vocab_counts(stream, table, checkpoint_dir=ckpt)
+    q = stream_state(stream, {table: vocab_state()}, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
         for rows in _VOCAB_BATCHES[1:]:
@@ -77,7 +79,8 @@ def _vocab_uninterrupted(spark, tmp_path, tag):
     finally:
         q.stop()
     return sorted(
-        (r.word, r.n) for r in read_vocab(spark, table).collect()
+        (r.word, r.n)
+        for r in read_state(spark, table, vocab_state()).collect()
     )
 
 
@@ -93,7 +96,9 @@ def test_vocab_restart_after_committed_batch_equals_uninterrupted(
     _write_batch(spark, _VOCAB_BATCHES[0], DOC_SCHEMA, src)
     for i in range(3):  # three separate query lifetimes, one per batch
         stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
-        q = stream_vocab_counts(stream, table, checkpoint_dir=ckpt)
+        q = stream_state(
+            stream, {table: vocab_state()}, checkpoint_dir=ckpt
+        )
         try:
             q.processAllAvailable()
         finally:
@@ -101,7 +106,10 @@ def test_vocab_restart_after_committed_batch_equals_uninterrupted(
         if i < 2:
             _write_batch(spark, _VOCAB_BATCHES[i + 1], DOC_SCHEMA, src)
 
-    got = sorted((r.word, r.n) for r in read_vocab(spark, table).collect())
+    got = sorted(
+        (r.word, r.n)
+        for r in read_state(spark, table, vocab_state()).collect()
+    )
     want = _vocab_uninterrupted(spark, tmp_path, "uvocab")
     assert got == want
     # each batch committed as its own epoch partition across restarts
@@ -123,9 +131,9 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
     ckpt = str(tmp_path / "ckpt_k")
 
     _write_batch(spark, _VOCAB_BATCHES[0], DOC_SCHEMA, src)
-    q = stream_vocab_counts(
+    q = stream_state(
         spark.readStream.schema(DOC_SCHEMA).parquet(src),
-        table,
+        {table: vocab_state()},
         checkpoint_dir=ckpt,
     )
     try:
@@ -137,9 +145,9 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
     # partial (counts x100) under the epoch partition, then dies before
     # foreachBatch returns -- data files landed, checkpoint did not
     # commit. This is the worst-ordered crash for the maintenance sink.
-    real_apply = vocab_mod.apply_vocab_batch
+    real_apply = state_mod.apply_state_batch
 
-    def _poison_then_crash(batch_df, epoch_id, table_path, **kw):
+    def _poison_then_crash(batch_df, epoch_id, sinks, **kw):
         from pyspark.sql import functions as F
 
         partial = vocab_mod.vocab_partial(batch_df, **kw).withColumn(
@@ -150,15 +158,15 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_epoch")
-            .parquet(table_path)
+            .parquet(*sinks)
         )
         raise RuntimeError("simulated crash after sink write")
 
-    monkeypatch.setattr(vocab_mod, "apply_vocab_batch", _poison_then_crash)
+    monkeypatch.setattr(state_mod, "apply_state_batch", _poison_then_crash)
     _write_batch(spark, _VOCAB_BATCHES[1], DOC_SCHEMA, src)
-    q = stream_vocab_counts(
+    q = stream_state(
         spark.readStream.schema(DOC_SCHEMA).parquet(src),
-        table,
+        {table: vocab_state()},
         checkpoint_dir=ckpt,
     )
     with pytest.raises(Exception, match="simulated crash"):
@@ -170,16 +178,17 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
 
     # the poisoned partial IS on disk at this point (the crash window)
     poisoned = {
-        r.word: r.n for r in read_vocab(spark, table).collect()
+        r.word: r.n
+        for r in read_state(spark, table, vocab_state()).collect()
     }
     assert any(n >= 100 for n in poisoned.values())
 
     # Lifetime 3: restart with the real sink; Spark replays the
     # uncommitted epoch; dynamic overwrite replaces the poisoned
     # partition; then the final batch streams through normally.
-    q = stream_vocab_counts(
+    q = stream_state(
         spark.readStream.schema(DOC_SCHEMA).parquet(src),
-        table,
+        {table: vocab_state()},
         checkpoint_dir=ckpt,
     )
     try:
@@ -189,7 +198,10 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
     finally:
         q.stop()
 
-    got = sorted((r.word, r.n) for r in read_vocab(spark, table).collect())
+    got = sorted(
+        (r.word, r.n)
+        for r in read_state(spark, table, vocab_state()).collect()
+    )
     want = _vocab_uninterrupted(spark, tmp_path, "uvocab_k")
     assert got == want
 

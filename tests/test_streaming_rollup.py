@@ -7,10 +7,13 @@ from pyspark.sql import functions as F
 
 from rag_vertex_ai_vector_search_spark.sources import load_table
 from rag_vertex_ai_vector_search_spark.streaming.rollup import (
-    apply_rollup_batch,
-    compact_rollup,
     read_rollup,
-    stream_rollup_events,
+    rollup_state,
+)
+from rag_vertex_ai_vector_search_spark.streaming.state import (
+    apply_state_batch,
+    compact_state,
+    stream_state,
 )
 
 import pytest
@@ -49,7 +52,7 @@ def test_stream_rollup_matches_batch(spark, sf_smoke, tmp_path):
     stream = spark.readStream.schema(ev.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = stream_rollup_events(stream, rollup, checkpoint_dir=ckpt)
+    q = stream_state(stream, {rollup: rollup_state()}, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -69,11 +72,11 @@ def test_rollup_replay_is_idempotent(spark, sf_smoke, tmp_path):
     rollup = str(tmp_path / "rollup")
     first = ev.filter(F.col("user_id") % 2 == 0)
     second = ev.filter(F.col("user_id") % 2 == 1)
-    apply_rollup_batch(first, 0, rollup)
-    apply_rollup_batch(second, 1, rollup)
+    apply_state_batch(first, 0, {rollup: rollup_state()})
+    apply_state_batch(second, 1, {rollup: rollup_state()})
     before = read_rollup(spark, rollup).collect()
 
-    apply_rollup_batch(second, 1, rollup)  # replay epoch 1
+    apply_state_batch(second, 1, {rollup: rollup_state()})  # replay epoch 1
     after = read_rollup(spark, rollup)
     _assert_same(after, spark.createDataFrame(before, after.schema))
     _assert_same(after, _batch_hourly(ev))
@@ -86,15 +89,19 @@ def test_compaction_preserves_view_and_folds_epochs(spark, sf_smoke, tmp_path):
     rollup = str(tmp_path / "rollup")
     # many small epochs, as a long-running stream would leave behind
     for i in range(5):
-        apply_rollup_batch(ev.filter(F.col("user_id") % 5 == i), i, rollup)
+        apply_state_batch(
+            ev.filter(F.col("user_id") % 5 == i), i, {rollup: rollup_state()}
+        )
     expected = _batch_hourly(ev)
     _assert_same(read_rollup(spark, rollup), expected)
 
-    compact_rollup(spark, rollup)
+    compact_state(spark, rollup, rollup_state())
     dirs = [d for d in glob.glob(rollup + "/_epoch=*")]
     assert dirs == [rollup + "/_epoch=-1"]
     _assert_same(read_rollup(spark, rollup), expected)
 
     # incremental continues on top of the compacted base
-    apply_rollup_batch(ev.limit(0), 99, rollup)  # empty batch: no-op
+    apply_state_batch(
+        ev.limit(0), 99, {rollup: rollup_state()}
+    )  # empty batch: no-op
     _assert_same(read_rollup(spark, rollup), expected)

@@ -11,14 +11,14 @@ from rag_vertex_ai_vector_search_spark.operators.sketch import (
 )
 from rag_vertex_ai_vector_search_spark.sources import load_table
 from rag_vertex_ai_vector_search_spark.streaming.sketch_stream import (
-    apply_cms_batch,
-    apply_hll_batch,
-    compact_cms,
-    compact_hll,
-    read_cms,
-    read_hll,
-    stream_cms,
-    stream_hll,
+    cms_state,
+    hll_state,
+)
+from rag_vertex_ai_vector_search_spark.streaming.state import (
+    apply_state_batch,
+    compact_state,
+    read_state,
+    stream_state,
 )
 
 # Slow tier: excluded from the per-commit fast gate (pytest -m "not full");
@@ -61,9 +61,9 @@ def test_stream_hll_matches_batch_and_survives_compaction(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_hll(
-        stream, table, checkpoint_dir=ckpt, col="word",
-        group_cols=("lang",), p=P,
+    q = stream_state(
+        stream, {table: hll_state(col="word", group_cols=("lang",), p=P)},
+        checkpoint_dir=ckpt,
     )
     try:
         q.processAllAvailable()
@@ -73,7 +73,9 @@ def test_stream_hll_matches_batch_and_survives_compaction(
     epochs = spark.read.parquet(table).select("_epoch").distinct().count()
     assert epochs >= 2
     batch = hll_sketch(_words(docs), "word", group_cols=("lang",), p=P)
-    maintained = read_hll(spark, table, group_cols=("lang",))
+    maintained = read_state(
+        spark, table, hll_state(col="word", group_cols=("lang",), p=P)
+    )
     _assert_same(maintained, batch)
     # estimates off the maintained table == estimates off the batch
     _assert_same(
@@ -81,14 +83,21 @@ def test_stream_hll_matches_batch_and_survives_compaction(
         hll_estimate(batch, group_cols=("lang",), p=P),
     )
 
-    compact_hll(spark, table, group_cols=("lang",))
+    compact_state(
+        spark, table, hll_state(col="word", group_cols=("lang",), p=P)
+    )
     folded_epochs = [
         r[0]
         for r in spark.read.parquet(table).select("_epoch").distinct()
         .collect()
     ]
     assert folded_epochs == [-1]
-    _assert_same(read_hll(spark, table, group_cols=("lang",)), batch)
+    _assert_same(
+        read_state(
+            spark, table, hll_state(col="word", group_cols=("lang",), p=P)
+        ),
+        batch,
+    )
 
 
 def test_hll_replay_idempotent(spark, sf_smoke, tmp_path):
@@ -101,11 +110,19 @@ def test_hll_replay_idempotent(spark, sf_smoke, tmp_path):
     table = str(tmp_path / "hll")
     even = _words(docs.filter(F.col("doc_id") % 2 == 0))
     odd = _words(docs.filter(F.col("doc_id") % 2 == 1))
-    apply_hll_batch(even, 0, table, col="word", group_cols=("lang",), p=P)
-    apply_hll_batch(odd, 1, table, col="word", group_cols=("lang",), p=P)
-    apply_hll_batch(odd, 1, table, col="word", group_cols=("lang",), p=P)
+    apply_state_batch(
+        even, 0, {table: hll_state(col="word", group_cols=("lang",), p=P)}
+    )
+    apply_state_batch(
+        odd, 1, {table: hll_state(col="word", group_cols=("lang",), p=P)}
+    )
+    apply_state_batch(
+        odd, 1, {table: hll_state(col="word", group_cols=("lang",), p=P)}
+    )
     _assert_same(
-        read_hll(spark, table, group_cols=("lang",)),
+        read_state(
+            spark, table, hll_state(col="word", group_cols=("lang",), p=P)
+        ),
         hll_sketch(words, "word", group_cols=("lang",), p=P),
     )
 
@@ -121,35 +138,52 @@ def test_stream_cms_matches_batch_and_replay(spark, sf_smoke, tmp_path):
     table = str(tmp_path / "cms")
     even = _words(docs.filter(F.col("doc_id") % 2 == 0))
     odd = _words(docs.filter(F.col("doc_id") % 2 == 1))
-    apply_cms_batch(
-        even, 0, table, col="word", depth=DEPTH, width=WIDTH
+    apply_state_batch(
+        even, 0, {table: cms_state(col="word", depth=DEPTH, width=WIDTH)}
     )
-    apply_cms_batch(
-        odd, 1, table, col="word", depth=DEPTH, width=WIDTH
+    apply_state_batch(
+        odd, 1, {table: cms_state(col="word", depth=DEPTH, width=WIDTH)}
     )
-    apply_cms_batch(
-        odd, 1, table, col="word", depth=DEPTH, width=WIDTH
+    apply_state_batch(
+        odd, 1, {table: cms_state(col="word", depth=DEPTH, width=WIDTH)}
     )  # at-least-once replay
     batch = cms_sketch(words, "word", depth=DEPTH, width=WIDTH)
-    _assert_same(read_cms(spark, table), batch)
+    _assert_same(
+        read_state(
+            spark, table, cms_state(col="word", depth=DEPTH, width=WIDTH)
+        ),
+        batch,
+    )
 
-    compact_cms(spark, table)
+    compact_state(
+        spark, table, cms_state(col="word", depth=DEPTH, width=WIDTH)
+    )
     folded_epochs = [
         r[0]
         for r in spark.read.parquet(table).select("_epoch").distinct()
         .collect()
     ]
     assert folded_epochs == [-1]
-    _assert_same(read_cms(spark, table), batch)
+    _assert_same(
+        read_state(
+            spark, table, cms_state(col="word", depth=DEPTH, width=WIDTH)
+        ),
+        batch,
+    )
 
     # and a post-compaction epoch still folds in additively
-    apply_cms_batch(
-        even, 7, table, col="word", depth=DEPTH, width=WIDTH
+    apply_state_batch(
+        even, 7, {table: cms_state(col="word", depth=DEPTH, width=WIDTH)}
     )
     twice_even = cms_sketch(
         words.unionByName(even), "word", depth=DEPTH, width=WIDTH
     )
-    _assert_same(read_cms(spark, table), twice_even)
+    _assert_same(
+        read_state(
+            spark, table, cms_state(col="word", depth=DEPTH, width=WIDTH)
+        ),
+        twice_even,
+    )
 
 
 def test_stream_cms_weighted(spark, sf_smoke, tmp_path):
@@ -165,16 +199,23 @@ def test_stream_cms_weighted(spark, sf_smoke, tmp_path):
     table = str(tmp_path / "cmsw")
     even = weighted.filter(F.col("doc_id") % 2 == 0)
     odd = weighted.filter(F.col("doc_id") % 2 == 1)
-    apply_cms_batch(
-        even, 0, table, col="word", depth=DEPTH, width=WIDTH,
-        weight_col="w",
+    apply_state_batch(
+        even, 0,
+        {table: cms_state(
+            col="word", depth=DEPTH, width=WIDTH, weight_col="w"
+        )},
     )
-    apply_cms_batch(
-        odd, 1, table, col="word", depth=DEPTH, width=WIDTH,
-        weight_col="w",
+    apply_state_batch(
+        odd, 1,
+        {table: cms_state(
+            col="word", depth=DEPTH, width=WIDTH, weight_col="w"
+        )},
     )
     _assert_same(
-        read_cms(spark, table),
+        read_state(
+            spark, table,
+            cms_state(col="word", depth=DEPTH, width=WIDTH, weight_col="w"),
+        ),
         cms_sketch(
             weighted, "word", depth=DEPTH, width=WIDTH,
             weight=F.col("w"),
@@ -195,16 +236,18 @@ def test_stream_cms_live_stream(spark, sf_smoke, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_cms(
-        stream, table, checkpoint_dir=ckpt, col="word",
-        depth=DEPTH, width=WIDTH,
+    q = stream_state(
+        stream, {table: cms_state(col="word", depth=DEPTH, width=WIDTH)},
+        checkpoint_dir=ckpt,
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     _assert_same(
-        read_cms(spark, table),
+        read_state(
+            spark, table, cms_state(col="word", depth=DEPTH, width=WIDTH)
+        ),
         cms_sketch(_words(docs), "word", depth=DEPTH, width=WIDTH),
     )
 
@@ -219,7 +262,7 @@ def test_stream_bloom_matches_batch_replay_and_compaction(
         bloom_contains, bloom_sketch,
     )
     from rag_vertex_ai_vector_search_spark.streaming.sketch_stream import (
-        apply_bloom_batch, compact_bloom, read_bloom, stream_bloom,
+        bloom_state,
     )
 
     kw = dict(n_bits=1 << 16, k=3)
@@ -236,8 +279,8 @@ def test_stream_bloom_matches_batch_replay_and_compaction(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_bloom(
-        stream, table, checkpoint_dir=ckpt, col="word", **kw
+    q = stream_state(
+        stream, {table: bloom_state(col="word", **kw)}, checkpoint_dir=ckpt
     )
     try:
         q.processAllAvailable()
@@ -246,28 +289,37 @@ def test_stream_bloom_matches_batch_replay_and_compaction(
 
     assert spark.read.parquet(table).select("_epoch").distinct().count() >= 2
     batch = bloom_sketch(_words(docs), "word", **kw)
-    maintained = read_bloom(spark, table)
+    maintained = read_state(spark, table, bloom_state(col="word", **kw))
     _assert_same(maintained, batch)
 
     # replaying already-seen rows (a duplicate delivery under
     # at-least-once) is a no-op: bit_or is idempotent
-    apply_bloom_batch(_words(docs), 99, table, col="word", **kw)
-    _assert_same(read_bloom(spark, table), batch)
+    apply_state_batch(
+        _words(docs), 99, {table: bloom_state(col="word", **kw)}
+    )
+    _assert_same(
+        read_state(spark, table, bloom_state(col="word", **kw)), batch
+    )
 
     # membership verdicts identical off maintained vs batch sketches
     # (re-read: the replay overwrote partition files under the old plan)
     probes = _words(docs).select(F.col("word").alias("item")).distinct()
     _assert_same(
-        bloom_contains(read_bloom(spark, table), probes, **kw),
+        bloom_contains(
+            read_state(spark, table, bloom_state(col="word", **kw)),
+            probes, **kw,
+        ),
         bloom_contains(batch, probes, **kw),
     )
 
-    compact_bloom(spark, table)
+    compact_state(spark, table, bloom_state(col="word", **kw))
     assert [
         r[0] for r in
         spark.read.parquet(table).select("_epoch").distinct().collect()
     ] == [-1]
-    _assert_same(read_bloom(spark, table), batch)
+    _assert_same(
+        read_state(spark, table, bloom_state(col="word", **kw)), batch
+    )
 
 
 def test_stream_histogram_matches_batch_and_compaction(
@@ -280,7 +332,7 @@ def test_stream_histogram_matches_batch_and_compaction(
         histogram_quantiles, histogram_sketch,
     )
     from rag_vertex_ai_vector_search_spark.streaming.sketch_stream import (
-        compact_histogram, read_histogram, stream_histogram,
+        histogram_state,
     )
 
     kw = dict(lo=0, hi=12_000_000, n_bins=64)
@@ -298,8 +350,9 @@ def test_stream_histogram_matches_batch_and_compaction(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_histogram(
-        stream, table, checkpoint_dir=ckpt, col="cents", **kw
+    q = stream_state(
+        stream, {table: histogram_state(col="cents", **kw)},
+        checkpoint_dir=ckpt,
     )
     try:
         q.processAllAvailable()
@@ -308,16 +361,18 @@ def test_stream_histogram_matches_batch_and_compaction(
 
     assert spark.read.parquet(table).select("_epoch").distinct().count() >= 2
     batch = histogram_sketch(li, "cents", **kw)
-    maintained = read_histogram(spark, table)
+    maintained = read_state(spark, table, histogram_state(col="cents", **kw))
     _assert_same(maintained, batch)
     _assert_same(
         histogram_quantiles(maintained, quantiles=((1, 2), (9, 10)), **kw),
         histogram_quantiles(batch, quantiles=((1, 2), (9, 10)), **kw),
     )
 
-    compact_histogram(spark, table)
+    compact_state(spark, table, histogram_state(col="cents", **kw))
     assert [
         r[0] for r in
         spark.read.parquet(table).select("_epoch").distinct().collect()
     ] == [-1]
-    _assert_same(read_histogram(spark, table), batch)
+    _assert_same(
+        read_state(spark, table, histogram_state(col="cents", **kw)), batch
+    )

@@ -13,12 +13,13 @@ from rag_vertex_ai_vector_search_spark.operators.tokenizer import (
     vocab_coverage_report,
 )
 from rag_vertex_ai_vector_search_spark.sources import load_table
-from rag_vertex_ai_vector_search_spark.streaming.vocab import (
-    apply_vocab_batch,
-    compact_vocab,
-    read_vocab,
-    stream_vocab_counts,
+from rag_vertex_ai_vector_search_spark.streaming.state import (
+    apply_state_batch,
+    compact_state,
+    read_state,
+    stream_state,
 )
+from rag_vertex_ai_vector_search_spark.streaming.vocab import vocab_state
 
 import pytest
 
@@ -50,7 +51,7 @@ def test_stream_vocab_matches_batch(spark, sf_smoke, tmp_path):
     stream = spark.readStream.schema(docs.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = stream_vocab_counts(stream, table, checkpoint_dir=ckpt)
+    q = stream_state(stream, {table: vocab_state()}, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -59,7 +60,7 @@ def test_stream_vocab_matches_batch(spark, sf_smoke, tmp_path):
     epochs = spark.read.parquet(table).select("_epoch").distinct().count()
     assert epochs >= 2, "stream must have produced multiple micro-batches"
     _assert_same(
-        read_vocab(spark, table),
+        read_state(spark, table, vocab_state()),
         _batch_counts(docs).withColumn("n", F.col("n").cast("long")),
     )
 
@@ -71,10 +72,12 @@ def test_vocab_replay_idempotent_and_tokenizer_parity(spark, sf_smoke, tmp_path)
     table = str(tmp_path / "vocab")
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
-    apply_vocab_batch(first, 0, table)
-    apply_vocab_batch(second, 1, table)
-    apply_vocab_batch(second, 1, table)  # at-least-once replay
-    counts = read_vocab(spark, table)
+    apply_state_batch(first, 0, {table: vocab_state()})
+    apply_state_batch(second, 1, {table: vocab_state()})
+    apply_state_batch(
+        second, 1, {table: vocab_state()}
+    )  # at-least-once replay
+    counts = read_state(spark, table, vocab_state())
     _assert_same(
         counts, _batch_counts(docs).withColumn("n", F.col("n").cast("long"))
     )
@@ -91,13 +94,15 @@ def test_vocab_compaction_folds_epochs(spark, sf_smoke, tmp_path):
     docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     table = str(tmp_path / "vocab")
     for i in range(4):
-        apply_vocab_batch(docs.filter(F.col("doc_id") % 4 == i), i, table)
-    expected = read_vocab(spark, table).collect()
+        apply_state_batch(
+            docs.filter(F.col("doc_id") % 4 == i), i, {table: vocab_state()}
+        )
+    expected = read_state(spark, table, vocab_state()).collect()
 
-    compact_vocab(spark, table)
+    compact_state(spark, table, vocab_state())
     dirs = sorted(glob.glob(table + "/_epoch=*"))
     assert dirs == [table + "/_epoch=-1"]
-    after = read_vocab(spark, table)
+    after = read_state(spark, table, vocab_state())
     _assert_same(after, spark.createDataFrame(expected, after.schema))
 
 
@@ -112,9 +117,13 @@ def test_train_bpe_reads_maintained_vocab(spark, sf_smoke, tmp_path):
 
     docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     table = str(tmp_path / "vocab")
-    apply_vocab_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, table)
-    apply_vocab_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
-    maintained = read_vocab(spark, table)
+    apply_state_batch(
+        docs.filter(F.col("doc_id") % 2 == 0), 0, {table: vocab_state()}
+    )
+    apply_state_batch(
+        docs.filter(F.col("doc_id") % 2 == 1), 1, {table: vocab_state()}
+    )
+    maintained = read_state(spark, table, vocab_state())
     a = [tuple(r) for r in
          train_bpe(None, counts=maintained, n_merges=4)
          .orderBy("merge_rank").collect()]
